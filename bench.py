@@ -422,13 +422,12 @@ def run_bench(master: str | None, sf_dir: str, cpus: int):
 
     timed("connected_components", cc_fn, timings)
     extras["cc_nodes_per_sec"] = round(2_000_000 / timings["connected_components"], 1)
-    extras["cc_star_rounds"] = dd.CC_LAST_ROUNDS
 
     # round 5: the adversarial LONG-CHAIN case at real bench depth —
-    # 2M nodes as 15,625 disjoint 128-node paths (diameter 127, ~10
-    # pointer-jump rounds), so round COUNT x per-round cost is measured,
-    # not assumed. Exercises the lineage-cut path (parquet cut every 2
-    # rounds) that keeps Catalyst analysis time flat.
+    # 2M nodes as 15,625 disjoint 128-node paths (diameter 127, ~8
+    # large-star/small-star rounds), so round COUNT x per-round cost is
+    # measured, not assumed. Exercises the size-triggered lineage cut
+    # that keeps Catalyst analysis time flat.
     def cc_chain_fn():
         # ids laid out path-major: edge i -> i+1 unless i ends a path
         ids = spark.range(2_000_000)
@@ -443,7 +442,6 @@ def run_bench(master: str | None, sf_dir: str, cpus: int):
 
     timed("cc_chain_d127", cc_chain_fn, timings)
     extras["cc_chain_nodes_per_sec"] = round(2_000_000 / timings["cc_chain_d127"], 1)
-    extras["cc_chain_rounds"] = dd.CC_LAST_ROUNDS
 
     # round 6: END-TO-END dedup at amplified corpus scale (documents are
     # 500 rows at sf<=0.01 and 5,000 at sf0.1, so the per-stage numbers
@@ -494,9 +492,8 @@ def run_bench(master: str | None, sf_dir: str, cpus: int):
         sigs = dedup_ops.minhash_signatures(dv, k=64).persist()
         sigs.count()
         cand = dedup_ops.minhash_lsh_pairs(sigs, bands=16, rows_per_band=4, min_jaccard_est=0.0)
-        # persist the verified edge set: CC's edge-lineage cut re-reads it
-        # (write + ids-only scan) and would otherwise re-execute the whole
-        # LSH + verify pipeline a second time inside the spill
+        # persist the verified edge set: the count below materializes it
+        # and CC's first round then reads it from the cache
         edges = (
             dedup_ops.ngram_jaccard_pairs(dv, cand.select("id_a", "id_b"), min_jaccard=0.8)
             .select("id_a", "id_b")
@@ -521,7 +518,6 @@ def run_bench(master: str | None, sf_dir: str, cpus: int):
     extras["dedup_e2e_docs_per_sec"] = round(n_corpus / timings["dedup_big_block"], 1)
     extras["dedup_e2e_docs"] = n_corpus
     extras["dedup_e2e_clusters"] = n_clusters
-    extras["dedup_e2e_rounds"] = dd.CC_LAST_ROUNDS
 
     # --- relational + training-data headliners from the registry
     # (minhash_verified_pairs = the full dedup pipeline: signatures ->

@@ -19,24 +19,22 @@ import tempfile as _tempfile
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# live connected-components lineage-cut spill dirs. Superseded cuts are
-# deleted eagerly inside the loop; the FINAL cut of each call must outlive
+# live lineage-cut spill dirs of the iterative graph operators
+# (connected_components here, graph.shortest_paths). Superseded cuts are
+# deleted eagerly inside each loop; the FINAL cut of each call must outlive
 # the returned DataFrame (a cache-evicted recompute re-scans it), so it is
-# only reclaimed here at interpreter exit.
+# only reclaimed by release_cc_spills() or at interpreter exit.
 _CC_CUT_DIRS: set[str] = set()
 
-# analyzed-plan size (chars) above which connected_components cuts label
-# lineage; ~2x this is the largest plan Catalyst ever re-analyzes
-_CC_CUT_PLAN_CHARS = 30_000
-
-# rounds used by the most recent connected_components() call on this
-# driver — observability for benchmarks (round COUNT x per-round cost is
-# the real cost model for deep graphs); not part of the result contract.
-CC_LAST_ROUNDS: int = 0
+# analyzed-plan size (chars) above which an iterative operator cuts its
+# lineage. Both loops read the previous round once, so the plan grows by
+# a few k chars per round: 2-round near-dup graphs (~10k) never cut, deep
+# graphs cut every ~6 rounds
+_CC_CUT_PLAN_CHARS = 12_000
 
 
 @atexit.register
@@ -54,6 +52,54 @@ def release_cc_spills() -> None:
     discarded — their lineage re-scans these files on recompute."""
     _cleanup_cc_cut_dirs()
     _CC_CUT_DIRS.clear()
+
+
+class _LineageCut:
+    """Size-triggered lineage cut for one call of an iterative operator.
+
+    Calling it on a round's frame returns the frame unchanged while its
+    analyzed plan stays within ``plan_chars``, and a flat re-read of it
+    once the plan grows past that (``plan_chars=0`` never cuts). With a
+    checkpoint dir configured (``sparkContext.setCheckpointDir``) the cut
+    is ``df.checkpoint(eager=True)``, which is correct on any cluster.
+    Otherwise it is a parquet spill to a driver-local temp dir, which is
+    only correct where driver and executors share a filesystem, so a
+    non-local master without a checkpoint dir raises up front. A spill
+    is preferred to ``localCheckpoint`` in local mode because its files
+    have a deterministic delete: each new spill removes the call's
+    previous one, and the last one stays registered in ``_CC_CUT_DIRS``
+    because the returned frame re-scans it on recompute."""
+
+    def __init__(self, spark, op: str, prefix: str, plan_chars: int):
+        sc = spark.sparkContext._jsc.sc()
+        self.spark, self.prefix, self.plan_chars = spark, prefix, plan_chars
+        self.reliable = sc.getCheckpointDir().isDefined()
+        self.dir: str | None = None
+        if plan_chars and not self.reliable and not sc.isLocal():
+            raise RuntimeError(
+                f"{op}: lineage cuts on a non-local master need a "
+                "cluster-visible checkpoint dir — call "
+                "spark.sparkContext.setCheckpointDir('<shared path>') first "
+                "(the driver-local parquet spill is only correct in local mode), "
+                "or turn cuts off for shallow graphs (connected_components "
+                "checkpoint_interval=0, shortest_paths cut_plan_chars=0)"
+            )
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        if not self.plan_chars or (
+            len(df._jdf.queryExecution().analyzed().toString()) <= self.plan_chars
+        ):
+            return df
+        if self.reliable:
+            return df.checkpoint(eager=True)
+        new_dir = _tempfile.mkdtemp(prefix=self.prefix)
+        _CC_CUT_DIRS.add(new_dir)
+        df.write.parquet(f"{new_dir}/part")
+        if self.dir is not None:
+            _shutil.rmtree(self.dir, ignore_errors=True)
+            _CC_CUT_DIRS.discard(self.dir)
+        self.dir = new_dir
+        return self.spark.read.parquet(f"{new_dir}/part")
 
 
 def _hash_u64(a: np.ndarray) -> np.ndarray:
@@ -712,329 +758,94 @@ def connected_components(
     pairs only say "a ~ b"; keeping one document per GROUP requires the
     transitive closure (a~b, b~c => one cluster {a,b,c}).
 
-    Algorithm: min-label propagation with pointer jumping. Every round
-    (1) each node adopts the minimum label in its closed neighborhood
-    (one shuffle keyed on node id, labels-only exchange — 2 longs per
-    edge, never document payloads), then (2) labels chase their own
-    label's label (label(node) <- label(label(node))), which collapses
-    chains exponentially — the classic combination converges in
-    O(log n) rounds (cf. the MapReduce CC family: Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14; near-dup
-    clusters are tiny-diameter, so 2-4 rounds in practice).
+    Algorithm: alternating large-star / small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14). With
+    Γ(u) the neighbours of u and m(u) = min(Γ(u) ∪ {u}), each round
+    rewrites the edge set twice without changing its components:
 
-    Driver involvement per round is ONE scalar (the changed-label
-    count); each round's label frame is fully materialized into the
-    cache before the previous round's cache is released, so execution
-    never re-walks the chain of rounds.
+    - large-star: every neighbour v >= u of u is linked to m(u). It is
+      one keyed aggregate that collects Γ(u) per node; the same row
+      flags u when it has a smaller neighbour and more than one
+      neighbour, i.e. when u is not yet a leaf of a min-rooted star.
+    - small-star: grouped by the larger endpoint u, u and all its
+      (smaller) neighbours are linked to their minimum.
 
-    Lineage discipline: the logical plan grows with every round, and
-    on graphs deeper than a few rounds Catalyst ANALYSIS time becomes
-    the bottleneck long before execution does (a depth-3 run already
-    produces a ~47k-line EXPLAIN). Every ``checkpoint_interval``
-    rounds the label frame is therefore cut flat: spilled to a parquet
-    temp dir and re-read as a fresh scan (the GraphFrames
-    connectedComponents checkpointInterval idea, but with DETERMINISTIC
-    cleanup — the superseded cut dir is deleted as soon as the next cut
-    lands, so at most two spills are ever live per call: the ids-only
-    edge materialization and the latest label cut).
-    A parquet spill is chosen over ``localCheckpoint`` deliberately:
-    the checkpoint RDD's storage cannot be released through any public
-    DataFrame handle (unpersisting the wrapper leaks one cached label
-    frame per cut — the round-4 regression), while a file cut has a
-    flat plan AND a deterministic delete. The final cut dir (if any)
-    must outlive the returned frame (recompute re-scans it); it is
-    removed at interpreter exit, or earlier via
-    :func:`release_cc_spills` (long-lived drivers calling this per
-    batch should release between batches). On a session with a
-    cluster-visible checkpoint dir configured, the cut uses
-    ``df.checkpoint(eager=True)`` instead — the driver-local spill
-    path is only correct where driver and executors share a
-    filesystem (local mode). Near-dup graphs converge in 2-4
-    rounds and (since the size trigger) never pay a label spill at all;
-    ``checkpoint_interval=0`` disables cutting entirely. Cuts are
-    SIZE-triggered rather than round-counted: the pointer jump is a
-    self-join, so the logical plan DOUBLES per round; the loop checks
-    the analyzed-plan size each round and cuts when it crosses
-    ``_CC_CUT_PLAN_CHARS`` — deep graphs stay bounded at ~2x the
-    threshold, while tiny-diameter graphs (and flat edge frames) skip
-    the parquet round trips entirely.
+    The driver reads one scalar per round, the flagged-node count of
+    the large-star aggregate. When it is 0 the edge set is a forest of
+    stars each rooted at its component's minimum, so m(u) is the answer
+    and is taken from that same aggregate. The loop runs O(log^2 n)
+    rounds (about log n in practice), whatever the id order. Each
+    round reads the previous round's aggregate once (both edge
+    directions come from one ``inline``), so the plan grows linearly,
+    and the round frame is fully materialized into the cache before the
+    previous one is released. A self-loop (u, u) is kept as long as u
+    is its star's root, so a node whose only edge is a self-loop stays
+    in the output as its own component.
 
-    Returns (node, component) with component = min reachable
-    node id; nodes are the edge endpoints (callers left-join their full
-    id set and coalesce singletons to themselves).
+    Lineage: once a round's analyzed plan passes ``_CC_CUT_PLAN_CHARS``
+    it is cut flat by :class:`_LineageCut` (shared with
+    ``graph.shortest_paths``); ``checkpoint_interval=0`` disables cuts.
+    The final cut dir backs the returned frame and is removed at
+    interpreter exit or by :func:`release_cc_spills`.
+
+    Returns (node, component) with component = min reachable node id,
+    for any orderable id type; nodes are the edge endpoints (callers
+    left-join their full id set and coalesce singletons to themselves).
+    Raises if ``max_rounds`` rounds do not converge.
     """
-    spark = edges.sparkSession
-    # reliable-checkpoint mode: on a real cluster the driver-local parquet
-    # spill below would be wrong (executors write their own local disks),
-    # so when the session has a cluster-visible checkpoint dir configured
-    # (sparkContext.setCheckpointDir) the cut uses Spark's own
-    # df.checkpoint — same flat plan, cluster-correct storage, files
-    # managed by Spark (spark.cleaner.referenceTracking.cleanCheckpoints
-    # reclaims them). The local spill remains the local-mode default
-    # because its cleanup is deterministic.
-    _use_reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    # runtime guard, not just a docstring: on a non-local master without a
-    # checkpoint dir, the tempfile spill would scatter label/edge parquet
-    # across executor-local disks and the driver-side re-read would lose
-    # data silently. Fail loud with the fix spelled out.
-    if (
-        checkpoint_interval
-        and not _use_reliable
-        and not spark.sparkContext._jsc.sc().isLocal()
-    ):
-        raise RuntimeError(
-            "connected_components: lineage cuts on a non-local master need a "
-            "cluster-visible checkpoint dir — call "
-            "spark.sparkContext.setCheckpointDir('<shared path>') first "
-            "(the driver-local parquet spill is only correct in local mode), "
-            "or pass checkpoint_interval=0 to disable cutting for "
-            "small-diameter graphs"
-        )
-    # NOTE: the symmetric edge set is deduped AFTER the dst repartition
-    # below — hash partitioning on dst co-locates every (src, dst) twin,
-    # so the dropDuplicates aggregate runs on the repartition exchange's
-    # output without a second full-edge exchange (round 7; the former
-    # distinct-then-repartition shape paid two). The spill (when it
-    # fires) therefore writes the raw union including duplicates — fine
-    # for the pair tables that reach this operator (already deduped);
-    # n_sym below is correspondingly an upper bound, which only sizes
-    # partitions.
-    sym = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst")).union(
-        edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
+    cut = _LineageCut(
+        edges.sparkSession,
+        "connected_components",
+        "jpspark_cc_cut_",
+        _CC_CUT_PLAN_CHARS if checkpoint_interval else 0,
     )
-    cut_dir: str | None = None
-    # cut the EDGE lineage up front when it is worth cutting: sym is
-    # referenced once per round and the pointer-jump self-join doubles
-    # every reference, so an upstream pair-finding pipeline (MinHash ->
-    # verify) embedded in sym's plan multiplies into a 10^4-line EXPLAIN
-    # by round 2 even before any label cut fires. One ids-only
-    # materialization makes every reference a flat scan — also the right
-    # barrier at scale (edges are re-read ~2x per round). Edges that are
-    # ALREADY flat (a scan, a local relation, a simple generator — the
-    # common case for pre-materialized pair tables) skip the spill: it
-    # would cost a parquet round trip to bound a plan that is bounded.
-    sym_plan_chars = len(sym._jdf.queryExecution().analyzed().toString())
-    if checkpoint_interval and sym_plan_chars > 20_000:
-        if _use_reliable:
-            sym = sym.checkpoint(eager=True)
-        else:
-            cut_dir = _tempfile.mkdtemp(prefix="jpspark_cc_cut_")
-            _CC_CUT_DIRS.add(cut_dir)
-            sym.write.parquet(f"{cut_dir}/edges")
-            sym = spark.read.parquet(f"{cut_dir}/edges")
-    sym0 = sym.persist()
-    n_sym = sym0.count()
-    edge_dir, cut_dir = cut_dir, None
-
-    # ---- round-7 loop tuning (guide §2.2/§2.4: fewer/larger partitions,
-    # remove repeated shuffles). The per-round frames are fixed-width
-    # (node, label) pairs a few MB per million rows, so at bench scale the
-    # loop is TASK-OVERHEAD-bound, not byte-bound: sizing the loop's
-    # shuffle to ~rows_per_task rows per partition (capped at the
-    # session's configured parallelism, so cluster configs are never
-    # exceeded) cut the 2M-node chain bench ~35%. The edge frame is
-    # additionally hash-partitioned by dst ONCE and persisted — every
-    # round's message join then reuses that partitioning instead of
-    # re-exchanging the (larger) edge side per round. AQE re-plans every
-    # adaptive stage of every round; for this loop's uniform fixed-width
-    # exchanges that planning overhead buys nothing, so it is disabled
-    # INSIDE the loop by default (JPSPARK_CC_AQE=1 restores it, e.g. for
-    # clusters that want runtime skew-splitting of a giant component's
-    # label partition) and always restored afterwards. The conf toggle is
-    # session-scoped: a driver running OTHER queries concurrently with a
-    # CC call (this engine's harnesses never do) would see the loop's
-    # AQE/partition settings for the loop's duration.
-    import os as _os
-
-    rows_per_task = int(_os.environ.get("JPSPARK_CC_ROWS_PER_TASK", "250000"))
-    _cc_deep_jumps = max(1, int(_os.environ.get("JPSPARK_CC_DEEP_JUMPS", "5")))
-    default_p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # parallelism floor: once the graph has enough rows to give every
-    # task >= 2k rows, run at least 8-way — a medium graph collapsed to
-    # 1-2 partitions serializes every round on one core (measured ~25%
-    # slower on a 60k-node graph than 8-12-way)
-    floor_p = min(8, default_p, max(1, -(-n_sym // 2000)))
-    P = min(default_p, max(floor_p, -(-n_sym // max(rows_per_task, 1))))
-    keep_aqe = _os.environ.get("JPSPARK_CC_AQE", "0") == "1"
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    global CC_LAST_ROUNDS
-    try:
-        if not keep_aqe:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(P))
-        sym = (
-            sym0.repartition(P, "dst")
-            .dropDuplicates(["src", "dst"])
-            .persist()
+    a, b = F.col("a"), F.col("b")
+    pairs = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+    pinned = None
+    for _ in range(max_rounds):
+        star = cut(
+            pairs.select(F.inline(F.array(
+                F.struct(a.alias("u"), b.alias("v")),
+                F.struct(b.alias("u"), a.alias("v")),
+            )))
+            .groupBy("u")
+            .agg(F.collect_set("v").alias("nbrs"))
+            .withColumn("m", F.least("u", F.array_min("nbrs")))
+        ).persist()
+        # a full aggregate, so every partition lands in the cache before
+        # the previous round's frame is released
+        flagged = star.agg(F.sum(
+            ((F.col("m") < F.col("u")) & (F.size("nbrs") > 1)).cast("long")
+        )).collect()[0][0]
+        if pinned is not None:
+            pinned.unpersist()
+        pinned = star
+        if not flagged:
+            return star.select(F.col("u").alias("node"), F.col("m").alias("component"))
+        # large-star: link each neighbour v >= u to m(u) (v == u only for
+        # a self-loop). small-star, grouped by the larger endpoint hi:
+        # link hi and its smaller neighbours lo to min(lo), keeping hi's
+        # self-loop when lo is just hi
+        lo = (
+            star.select("u", "m", F.explode("nbrs").alias("v"))
+            .filter(F.col("v") >= F.col("u"))
+            .groupBy(F.col("v").alias("hi"))
+            .agg(F.collect_set("m").alias("lo"))
         )
-        # labels init from DST, not src: sym is symmetric (both directions
-        # present), so distinct node sets are equal either way — but sym
-        # is hash-partitioned by dst, so the dst distinct satisfies its
-        # clustering requirement and plans with ZERO additional exchange
-        # (the src form paid one; round 7)
-        labels = pinned = (
-            sym.select(F.col("dst").alias("node"))
-            .distinct()
-            .withColumn("label", F.col("node"))
-            .persist()
+        pairs = (
+            lo.select(
+                "hi",
+                F.explode(F.array_union("lo", F.array("hi"))).alias("a"),
+                F.array_min("lo").alias("b"),
+            )
+            .filter((a > b) | (a == F.col("hi")))
+            .select("a", "b")
         )
-        # one materialization pass: the distinct scans EVERY sym partition,
-        # so this count fills both caches — a separate sym.count() job
-        # would re-walk the edge set for nothing
-        labels.count()
-        sym0.unpersist()
-        label_t = labels.schema["label"].dataType
-        for rnd in range(max_rounds):
-            # (1) closed-neighborhood min in ONE keyed aggregation (round
-            # 7): neighbor messages and the node's own label ride one
-            # union into a single groupBy — the former
-            # join+groupBy+left-join (two reduce stages) is now one. The
-            # old label travels as a third column that is NULL on the
-            # message leg; max() ignores NULLs and every node has exactly
-            # one labels-leg row, so max(old) IS the node's previous
-            # label — works for any orderable id type (string ids
-            # included), unlike an arithmetic-sum convergence probe.
-            msgs = sym.join(labels, sym.dst == labels.node).select(
-                F.col("src").alias("node"),
-                "label",
-                F.lit(None).cast(label_t).alias("old_label"),
-            )
-            own = labels.select(
-                "node", "label", F.col("label").alias("old_label")
-            )
-            stepped = (
-                msgs.unionByName(own)
-                .groupBy("node")
-                .agg(
-                    F.min("label").alias("label"),
-                    F.max("old_label").alias("old_label"),
-                )
-            )
-            # (2) pointer jump: label <- label(label). A graph still
-            # changing after two full rounds is DEEP (near-dup stars
-            # converge in 2), so later rounds jump five times by default
-            # (`JPSPARK_CC_DEEP_JUMPS`) — each extra jump is one more
-            # self-join but collapses label-chain depth ~2x, cutting the
-            # ROUND count (round cost is overhead-bound, so fewer rounds
-            # beat cheaper rounds; on the 2M-node diameter-127 chain,
-            # 3 jumps measured 30s -> 18s/5 rounds vs the round-6 loop,
-            # and 5 jumps 4 rounds/~16s; 4 jumps still needs 5 rounds,
-            # >=6 stays at 4 rounds while paying extra exchanges, and an
-            # escalating 1,1,3,5,7 schedule also still needs 5 rounds —
-            # all measured, so 5 is the plateau point. Near-dup graphs
-            # never reach round 2, so the deep-jump choice costs flat
-            # graphs nothing).
-            # Intermediate jumps are persisted for the duration of the
-            # round's job: unpersisted, the nested self-joins re-execute
-            # the whole round subtree per reference (measured 2-4x
-            # blowup).
-            n_jumps = 1 if rnd < 2 else _cc_deep_jumps
-            j = stepped
-            mids = []
-            for ji in range(n_jumps):
-                if ji > 0:
-                    j = j.persist()
-                    mids.append(j)
-                parent = j.select(
-                    F.col("node").alias("p_node"), F.col("label").alias("p_label")
-                )
-                j = (
-                    j.join(parent, j.label == parent.p_node, "left")
-                    .select(
-                        "node",
-                        "old_label",
-                        F.coalesce(F.col("p_label"), F.col("label")).alias("label"),
-                    )
-                )
-            # the cut check runs on EVERY round, converged one included:
-            # multi-jump rounds grow the plan ~2^(jumps+1)x, so a deep
-            # graph's final round would otherwise hand back a plan far
-            # past the bound (the returned frame's analyzed size is the
-            # contract the lineage-cut test pins). Checking the size every
-            # round is cheap by induction — the plan never exceeds ~2x the
-            # threshold before a cut fires — while tiny-diameter graphs
-            # over flat edge frames (the near-dup common case) never pay a
-            # spill at all.
-            cut_now = checkpoint_interval and (
-                len(j._jdf.queryExecution().analyzed().toString())
-                > _CC_CUT_PLAN_CHARS
-            )
-            _changed_agg = F.sum(
-                (F.col("label") != F.col("old_label")).cast("long")
-            ).alias("n")
-            if cut_now and not _use_reliable:
-                # lineage cut, SIZE-triggered: spill (node, label) to
-                # parquet and restart the plan from a flat scan. Round 7:
-                # the convergence scalar rides the spill write as an
-                # observed metric (CollectMetrics), so a cut round runs
-                # ONE compute job (write + changed-count) plus the
-                # re-read's cache-fill count — the former shape paid a
-                # separate aggregate job to materialize the round cache
-                # and then wrote from it. The previous cut's files are
-                # deleted once the new cut lands — bounded plan, cache,
-                # and disk, all deterministic.
-                obs = Observation()
-                new_dir = _tempfile.mkdtemp(prefix="jpspark_cc_cut_")
-                _CC_CUT_DIRS.add(new_dir)
-                (
-                    j.observe(obs, _changed_agg)
-                    .select("node", "label")
-                    .write.mode("overwrite")
-                    .parquet(f"{new_dir}/labels")
-                )
-                changed = obs.get["n"]
-                for m in mids:
-                    m.unpersist()
-                pinned.unpersist()
-                if cut_dir is not None:
-                    _shutil.rmtree(cut_dir, ignore_errors=True)
-                    _CC_CUT_DIRS.discard(cut_dir)
-                cut_dir = new_dir
-                labels = spark.read.parquet(f"{new_dir}/labels")
-                pinned = labels.persist()
-                labels.count()
-            else:
-                jumped = j.persist()
-                # convergence probe via ONE full aggregate: it must scan
-                # every partition so the ENTIRE frame lands in the cache
-                # before the parent is unpersisted below — a short-circuit
-                # probe (isEmpty) leaves unvisited partitions uncached and
-                # every later scan recomputes the full round lineage
-                # recursively (measured blowup: 5s/round -> 55s by round 4)
-                changed = jumped.agg(_changed_agg).collect()[0][0]
-                for m in mids:
-                    m.unpersist()
-                pinned.unpersist()
-                pinned = jumped  # persisted handle (labels projects it)
-                labels = jumped.select("node", "label")
-                if cut_now:
-                    # reliable-checkpoint mode (cluster): same shape as
-                    # before — checkpoint from the round cache, then
-                    # re-persist it (later rounds reference the labels
-                    # twice via the self-join and the convergence
-                    # aggregate once more; without a cache each reference
-                    # re-reads the checkpoint files)
-                    cut = labels.checkpoint(eager=True).persist()
-                    cut.count()
-                    pinned.unpersist()
-                    labels = cut
-                    pinned = cut
-            converged = not changed
-            if converged:
-                CC_LAST_ROUNDS = rnd + 1
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components: no convergence in {max_rounds} rounds "
-                "(graph diameter beyond the pointer-jump budget)"
-            )
-        sym.unpersist()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
-    # the final round's cache (pinned) backs the returned frame
-    return labels.select("node", F.col("label").alias("component"))
+    if pinned is not None:
+        pinned.unpersist()
+    raise RuntimeError(
+        f"connected_components: no convergence in {max_rounds} rounds"
+    )
 
 
 def chunk_documents(

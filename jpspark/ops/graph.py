@@ -5,9 +5,9 @@ the routing/reachability primitive over road-network or cell-adjacency
 graphs. Same execution discipline as ops/dedup.py connected_components:
 labels-only exchanges (node id + one double per row), one scalar to the
 driver per round (the improved-node count), per-round cache
-materialize-then-release, and size-triggered parquet lineage cuts (each
-round references the previous frame twice — union + min — so the plan
-doubles without cuts; the spill dirs share the CC registry and its
+materialize-then-release, one read of the previous round per round (so
+the plan grows linearly), and the size-triggered lineage cut of
+``dedup._LineageCut`` (its spill dirs share the CC registry and its
 release/atexit lifecycle).
 
 At 10^12-row scale the full-relaxation form below is the WORST case
@@ -20,12 +20,10 @@ pins down.
 
 from __future__ import annotations
 
-import tempfile as _tempfile
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _CC_CUT_DIRS, _CC_CUT_PLAN_CHARS
+from .dedup import _CC_CUT_PLAN_CHARS, _LineageCut
 
 SSSP_LAST_ROUNDS: int = 0
 
@@ -45,38 +43,23 @@ def shortest_paths(
     infinities ride the exchanges). Deterministic: relaxation computes
     exact min over identical float sums regardless of partitioning.
 
-    Each round: dist JOIN edges on src -> candidate (dst, dist + w),
-    union with current dist, min per node — two keyed exchanges of
-    (long, double) rows. Convergence = zero improved nodes, one scalar
-    per round. Raises if ``max_rounds`` is hit before convergence
-    (negative cycles are out of contract).
+    Each round: dist LEFT JOIN edges on src -> each node's own distance
+    plus a candidate (dst, dist + w) per out-edge, min per node — two
+    keyed exchanges of (long, double) rows. Convergence = zero improved
+    nodes, one scalar per round. Raises if ``max_rounds`` is hit before
+    convergence (negative cycles are out of contract).
 
     ``cut_plan_chars`` sizes the lineage-cut trigger (default: the
     shared CC threshold); 0 disables cutting entirely — the escape
     hatch for small-diameter graphs on cluster sessions without a
     checkpoint dir."""
     global SSSP_LAST_ROUNDS
-    spark = edges.sparkSession
-    if cut_plan_chars is None:
-        cut_plan_chars = _CC_CUT_PLAN_CHARS
-    # same storage discipline as connected_components: with a
-    # cluster-visible checkpoint dir the lineage cut uses df.checkpoint;
-    # the driver-local tempfile spill is only correct in local mode —
-    # fail loud on a non-local master rather than silently scatter
-    # parquet across executor disks (round-5 ADVICE on the CC twin)
-    _use_reliable = spark.sparkContext._jsc.sc().getCheckpointDir().isDefined()
-    if (
-        cut_plan_chars
-        and not _use_reliable
-        and not spark.sparkContext._jsc.sc().isLocal()
-    ):
-        raise RuntimeError(
-            "shortest_paths: lineage cuts on a non-local master need a "
-            "cluster-visible checkpoint dir — call "
-            "spark.sparkContext.setCheckpointDir('<shared path>') first "
-            "(the driver-local parquet spill is only correct in local mode), "
-            "or pass cut_plan_chars=0 to disable cutting for shallow graphs"
-        )
+    cut = _LineageCut(
+        edges.sparkSession,
+        "shortest_paths",
+        "jpspark-sssp-cut-",
+        _CC_CUT_PLAN_CHARS if cut_plan_chars is None else cut_plan_chars,
+    )
     e = edges.select(
         F.col(src_col).alias("src"),
         F.col(dst_col).alias("dst"),
@@ -94,30 +77,29 @@ def shortest_paths(
     )
     dist.count()
 
-    cut_dir: str | None = None
     rounds = 0
     pinned = dist
     for rounds in range(1, max_rounds + 1):
-        cand = (
-            dist.join(e, dist["node"] == e["src"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("dist") + F.col("w")).alias("dist"),
-                F.lit(None).cast("double").alias("_old"),
-            )
+        # one read of the previous round: every node's row carries its
+        # own distance (as dist and _old) plus a candidate (dst, dist + w,
+        # NULL) per out-edge. max(_old) recovers the previous distance
+        # (NULL for a node first reached this round), so convergence is a
+        # filter+count on THIS frame, with no re-join
+        step = dist.join(e, dist["node"] == e["src"], "left").select(
+            F.inline(F.array(
+                F.struct("node", "dist", F.col("dist").alias("_old")),
+                F.struct(
+                    F.col("dst").alias("node"),
+                    (F.col("dist") + F.col("w")).alias("dist"),
+                    F.lit(None).cast("double").alias("_old"),
+                ),
+            ))
         )
-        # round 7: the previous distance rides the union as a third
-        # column (exactly one non-null per node, from the dist leg, so
-        # max() recovers it; a node first reached this round keeps NULL)
-        # — convergence becomes a filter+count on THIS frame instead of
-        # a per-round re-join against the previous one.
-        own = dist.select("node", "dist", F.col("dist").alias("_old"))
-        new = (
-            own.unionByName(cand)
+        new = cut(
+            step.filter(F.col("node").isNotNull())
             .groupBy("node")
             .agg(F.min("dist").alias("dist"), F.max("_old").alias("_old"))
-            .persist()
-        )
+        ).persist()
         improved = (
             new.filter(F.col("_old").isNull() | (F.col("dist") < F.col("_old")))
             .count()
@@ -127,31 +109,6 @@ def shortest_paths(
         dist = new.select("node", "dist")
         if improved == 0:
             break
-        plan_chars = len(dist._jdf.queryExecution().analyzed().toString())
-        if cut_plan_chars and plan_chars > cut_plan_chars:
-            if _use_reliable:
-                # re-persist: the loop references dist twice per round
-                # (cand join, union), and without a cache each reference
-                # re-reads the checkpoint files
-                cut = dist.checkpoint(eager=True).persist()
-                cut.count()
-                pinned.unpersist()
-                dist = cut
-                pinned = cut
-            else:
-                new_dir = _tempfile.mkdtemp(prefix="jpspark-sssp-cut-")
-                _CC_CUT_DIRS.add(new_dir)
-                dist.write.mode("overwrite").parquet(new_dir)
-                pinned.unpersist()
-                dist = spark.read.parquet(new_dir).persist()
-                dist.count()
-                pinned = dist
-                if cut_dir is not None:
-                    import shutil as _shutil
-
-                    _shutil.rmtree(cut_dir, ignore_errors=True)
-                    _CC_CUT_DIRS.discard(cut_dir)
-                cut_dir = new_dir
     else:
         e.unpersist()
         raise RuntimeError(

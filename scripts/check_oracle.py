@@ -49,9 +49,11 @@ def main() -> int:
 
     qs, oracles = e.queries(), e.oracle_sql()
     failures = []
+    ran = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        ran += 1
         try:
             got = fn(spark, sf_dir).toPandas()
         except Exception as ex:
@@ -97,7 +99,7 @@ def main() -> int:
             except AssertionError:
                 failures.append((name, str(ex)[:200]))
                 print(f"FAIL  {name}: value mismatch\n{str(ex)[:400]}")
-    print(f"\n{len(failures)} failures / {len(qs)} queries")
+    print(f"\n{len(failures)} failures / {ran} queries")
     for n, m in failures:
         print(" -", n, ":", m[:160])
     spark.stop()
