@@ -24,6 +24,19 @@ Fingerprints are content-based (order-insensitive xxhash-style fold over
 row hashes), so resume is correct even if Spark re-plans partitioning of
 an unchanged input — a changed fingerprint simply re-writes that partition.
 
+One writer, one commit loop: every write path — load, resume, append,
+compaction and the row-level DML ops — turns Spark partitions into part
+files through ``_write_parts``, the single sink (fingerprint, resume
+skip, content-addressed PUT, column stats, manifest entry).
+``delete_where``, ``update_where`` and ``merge_into`` all run
+``_cow_commit``, the one copy-on-write loop: load the committed base,
+split its files by stats, write the rewrite, build the manifest, commit
+by exclusive create, and re-run up to 8 times on conflict; each op
+supplies only its file test, rewrite frame, report fields and lineage.
+Filters for ``scan``, the DML ops and ``TableIO.scan`` are checked once
+at entry (``_check_filters``) and turned into rows by one predicate
+builder (``_filter_predicate``).
+
 Storage backend: ALL I/O — part files, manifest JSON, listing, deletion —
 goes through the ``Storage`` seam below, whose contract is an OBJECT STORE,
 not a POSIX filesystem: flat ``(root, key)`` namespace, atomic whole-object
@@ -65,6 +78,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from typing import Iterator
 
@@ -459,11 +473,8 @@ def _fingerprint_pdf(pdf: pd.DataFrame) -> int:
     if not len(pdf):
         return 0
     h = pd.util.hash_pandas_object(pdf, index=False).to_numpy().astype(np.uint64)
-    total = np.uint64(0)
-    for v in h:  # int64 overflow-safe fold
-        total = np.uint64((int(total) + int(v)) & 0xFFFFFFFFFFFFFFFF)
-    mix = (int(total) ^ (len(pdf) << 1)) & 0x7FFFFFFFFFFFFFFF
-    return int(mix)
+    total = int(h.sum(dtype=np.uint64))  # wraps mod 2**64
+    return (total ^ (len(pdf) << 1)) & 0x7FFFFFFFFFFFFFFF
 
 
 _STR_BOUND = 64  # Iceberg-style truncated string bounds
@@ -697,13 +708,13 @@ def _col_stats_sidecar_blooms(
     return stats
 
 
-def _file_may_match(stats: dict, row_count: int, filters, bloom_ctx=None) -> bool:
-    """Conservative metadata test: False ONLY when the file's stats prove
-    no row can satisfy ALL of ``filters`` (conjunction). Unknown columns,
-    missing bounds, or unsupported ops never prune. ``bloom_ctx`` is a
-    (store, out_dir) pair enabling sidecar bloom lookups for =/IN probes;
-    without it only inline (legacy) blooms participate."""
-    _store, _odir = bloom_ctx if bloom_ctx else (None, None)
+def _file_may_match(meta: dict, filters, store, out_dir: str) -> bool:
+    """Conservative metadata test on one manifest entry: False ONLY when
+    the file's stats prove no row can satisfy ALL of ``filters``
+    (conjunction). Unknown columns or missing bounds never prune.
+    ``store``/``out_dir`` resolve sidecar blooms for =/IN probes."""
+    stats = meta.get("stats") or {}
+    row_count = int(meta["row_count"])
     for col, op, value in filters:
         ent = stats.get(col)
         if ent is None:
@@ -721,7 +732,7 @@ def _file_may_match(stats: dict, row_count: int, filters, bloom_ctx=None) -> boo
                 if lo is not None and hi is not None and all(v < lo or v > hi for v in vs):
                     return False
                 if bloom is not None and all(_bloom_probe_compatible(t, v) for v in vs):
-                    bits = _bloom_bits(bloom, _store, _odir)
+                    bits = _bloom_bits(bloom, store, out_dir)
                     if bits is not None and all(
                         not _bloom_may_contain(bloom, v, bits) for v in vs
                     ):
@@ -733,7 +744,7 @@ def _file_may_match(stats: dict, row_count: int, filters, bloom_ctx=None) -> boo
             ):
                 return False
             if op == "=" and bloom is not None and _bloom_probe_compatible(t, v):
-                bits = _bloom_bits(bloom, _store, _odir)
+                bits = _bloom_bits(bloom, store, out_dir)
                 if bits is not None and not _bloom_may_contain(bloom, v, bits):
                     return False
             if op in ("<", "<=") and lo is not None and (
@@ -755,8 +766,55 @@ _FILTER_OPS = {
     "<=": lambda c, v: c <= v,
     ">": lambda c, v: c > v,
     ">=": lambda c, v: c >= v,
-    "in": lambda c, v: c.isin(list(v)),
+    "in": lambda c, v: c.isin(v),
 }
+
+
+def _check_filters(what: str, filters) -> list:
+    """Validate a ``(col, op, value)`` conjunction once, at entry, before
+    any Spark job runs: every filter is a triple on a string column, its
+    op is one of ``_FILTER_OPS`` and an ``in`` value is a collection."""
+    out = []
+    for f in filters:
+        if not (isinstance(f, (tuple, list)) and len(f) == 3 and isinstance(f[0], str)):
+            raise ValueError(f"{what}: a filter is a (col, op, value) triple, got {f!r}")
+        col, op, value = f
+        if op not in _FILTER_OPS:
+            raise ValueError(
+                f"{what}: unknown filter op {op!r}; allowed ops: {', '.join(_FILTER_OPS)}"
+            )
+        if op == "in" and (isinstance(value, (str, bytes)) or not hasattr(value, "__iter__")):
+            raise ValueError(f"{what}: 'in' needs a collection of values, got {value!r}")
+        out.append((col, op, value))
+    return out
+
+
+def _filter_predicate(df: "DataFrame", filters):
+    """The row predicate of a checked conjunction over ``df`` — the one
+    builder scan, delete_where, update_where and TableIO.scan share.
+
+    A literal on the other side of the string/non-string line from its
+    column is try_cast to the column's type: Spark's ANSI coercion would
+    cast it and fail mid-job ("abc" vs bigint), while a try_cast literal
+    that does not parse is NULL and matches no row. Other literals keep
+    Spark's own widening — try_cast to a bigint column would truncate 5.5
+    to 5 and match id 5. NULL never matches, as in SQL."""
+    from pyspark.sql import functions as F
+
+    dtypes = dict(df.dtypes)
+    pred = F.lit(True)
+    for col, op, value in filters:
+        if col not in dtypes:
+            raise ValueError(f"filter column {col!r} is not in the table: {sorted(dtypes)}")
+        dt = dtypes[col]
+
+        def lit(v):
+            c = F.lit(v)
+            return c.try_cast(dt) if isinstance(v, str) != (dt == "string") else c
+
+        rhs = [lit(v) for v in value] if op == "in" else lit(value)
+        pred = pred & _FILTER_OPS[op](F.col(col), rhs)
+    return pred
 
 
 def scan(
@@ -778,14 +836,9 @@ def scan(
     of the table, and the decision uses only the manifest — no footer
     reads, no file opens. Returns (df, report) where report counts
     files/rows/bytes read vs skipped."""
+    filters = _check_filters("scan", filters)
     store = storage or LocalStorage()
-    if version is None:
-        m = load_manifest(out_dir, store)
-    else:
-        text = store.get_text(out_dir, f"{MANIFESTS_DIR}/manifest-{version:06d}.json")
-        if text is None:
-            raise FileNotFoundError(f"no snapshot version {version} under {out_dir}")
-        m = _resolve_partitions(json.loads(text), out_dir, store)
+    m = _load_version(store, out_dir, version)
     parts = m.get("partitions", {})
     if not parts:
         raise ValueError(f"snapshot has no committed partitions: {out_dir}")
@@ -794,10 +847,7 @@ def scan(
         "rows_skipped": 0, "bytes_skipped": 0,
     }
     for meta in parts.values():
-        if _file_may_match(
-            meta.get("stats") or {}, int(meta["row_count"]), filters,
-            bloom_ctx=(store, out_dir),
-        ):
+        if _file_may_match(meta, filters, store, out_dir):
             keep.append(_part_key(meta["path"]))
         else:
             report["rows_skipped"] += int(meta["row_count"])
@@ -807,25 +857,11 @@ def scan(
         df = read_snapshot(spark, out_dir, version=version, storage=store).limit(0)
     else:
         df = _read_parts(spark, out_dir, keep, store, m, filters=filters)
-    from pyspark.sql import functions as F
-
-    dtypes = dict(df.dtypes)
-    for col, op, value in filters:
-        # a column absent from the data (e.g. a clustering key this table
-        # was never written with) can't be filtered row-wise; stats
-        # pruning above already treated it as unknown (no prune)
-        if col in df.columns:
-            # coerce the literal(s) to the COLUMN's type via try_cast: a
-            # mistyped probe (int vs string column) then matches nothing
-            # instead of blowing up in ANSI-mode cast at runtime — and
-            # identically on the URI fast path and the object-read path
-            dt = dtypes[col]
-            if op == "in":
-                lit = [F.lit(v).try_cast(dt) for v in value]
-                df = df.filter(F.col(col).isin(lit))
-            else:
-                df = df.filter(_FILTER_OPS[op](F.col(col), F.lit(value).try_cast(dt)))
-    return df, report
+    # a column absent from the data (e.g. a clustering key this table
+    # was never written with) can't be filtered row-wise; stats pruning
+    # above already treated it as unknown (no prune)
+    present = [f for f in filters if f[0] in df.columns]
+    return df.filter(_filter_predicate(df, present)), report
 
 
 def _part_key(stored_path: str) -> str:
@@ -883,15 +919,9 @@ def _read_parts(spark, out_dir: str, keys, store, m: dict, filters=None):
     from pyspark.sql.pandas.types import to_arrow_schema
 
     target = pa.schema([f.with_nullable(True) for f in to_arrow_schema(schema)])
-    pa_filters = None
-    if filters:
-        try:
-            pa_filters = [
-                (c, _PA_FILTER_OPS[op], list(v) if op == "in" else v)
-                for c, op, v in filters
-            ]
-        except (KeyError, TypeError):
-            pa_filters = None  # unknown op: skip reader-level pushdown
+    pa_filters = [
+        (c, _PA_FILTER_OPS[op], list(v) if op == "in" else v) for c, op, v in filters
+    ] if filters else None
 
     def fetch(batches):
         import io as _io
@@ -935,15 +965,10 @@ def _read_parts(spark, out_dir: str, keys, store, m: dict, filters=None):
     return keys_df.mapInArrow(fetch, schema)
 
 
-_ROOT_MANIFEST_RE = None  # compiled lazily (re import kept local)
+_ROOT_MANIFEST_RE = re.compile(r"manifest-(\d{6})\.json$")
 
 
 def _is_root_manifest(key: str) -> bool:
-    global _ROOT_MANIFEST_RE
-    if _ROOT_MANIFEST_RE is None:
-        import re
-
-        _ROOT_MANIFEST_RE = re.compile(r"manifest-\d{6}\.json$")
     return bool(_ROOT_MANIFEST_RE.search(key))
 
 
@@ -976,18 +1001,29 @@ def _root_key(version: int) -> str:
     return f"{MANIFESTS_DIR}/manifest-{version:06d}.json"
 
 
+def _load_version(store, out_dir: str, version: int | None) -> dict:
+    """A snapshot's resolved manifest: the live pointer for ``None``,
+    else the archived root of that version."""
+    if version is None:
+        return load_manifest(out_dir, store)
+    text = store.get_text(out_dir, _root_key(version))
+    if text is None:
+        raise FileNotFoundError(f"no snapshot version {version} under {out_dir}")
+    return _resolve_partitions(json.loads(text), out_dir, store)
+
+
 def _latest_committed_version(store, out_dir: str) -> int:
     """Highest version with a committed root manifest archive. A root's
     existence IS commit (exclusive create, below); in-flight writers have
     no root yet and don't count. Falls back to the live pointer for
     pre-archive tables."""
-    import re
-
-    names = [
-        k for k in store.list(out_dir, f"{MANIFESTS_DIR}/manifest-") if _is_root_manifest(k)
+    versions = [
+        int(m.group(1))
+        for k in store.list(out_dir, f"{MANIFESTS_DIR}/manifest-")
+        if (m := _ROOT_MANIFEST_RE.search(k))
     ]
-    if names:
-        return max(int(re.search(r"manifest-(\d{6})\.json$", k).group(1)) for k in names)
+    if versions:
+        return max(versions)
     text = store.get_text(out_dir, MANIFEST_NAME)
     if text is None:
         return 0
@@ -1099,6 +1135,90 @@ def _try_commit(store, out_dir: str, manifest: dict, shard_size: int | None = No
     return True
 
 
+def _write_parts(
+    df: DataFrame, store, out_dir: str, base_pid: int, bloom_cols, bloom_fpp: float,
+    committed: dict | None = None,
+) -> dict:
+    """The one part-file writer: each Spark partition of ``df`` becomes
+    one content-addressed object ``part-{pid:05d}-{fingerprint:016x}.parquet``
+    (pid = partition index + ``base_pid``), written by its own task and
+    reported only once fully written. Returns the new manifest entries
+    keyed by pid. ``committed`` maps pid -> fingerprint of a committed
+    snapshot: a partition whose fingerprint matches and whose object
+    exists is skipped without a write (idempotent resume)."""
+    bc_committed = df.sparkSession.sparkContext.broadcast(committed or {})
+    arrow_schema = _arrow_schema_of(df)
+
+    def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ctx = TaskContext.get()
+        pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
+        parts = [b for b in batches if len(b)]
+        pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
+        fp = _fingerprint_pdf(pdf)
+        # content-addressed: a changed partition writes a NEW object, the
+        # old one stays referenced by the previous snapshot (time travel)
+        key = f"part-{pid:05d}-{fp:016x}.parquet"
+        skipped = bc_committed.value.get(pid) == fp and store.exists(out_dir, key)
+        if not skipped:
+            table = _spark_readable(
+                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
+                if len(pdf)
+                else arrow_schema.empty_table()
+            )
+            store.put_table(out_dir, key, table)
+        stats = _col_stats_sidecar_blooms(
+            _col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key
+        )
+        yield pd.DataFrame(
+            {
+                "partition_id": [pid],
+                "fingerprint": [fp],
+                "row_count": [len(pdf)],
+                "bytes": [store.size(out_dir, key)],
+                "path": [key],
+                "skipped": [skipped],
+                "col_stats": [json.dumps(stats)],
+            }
+        )
+
+    rows = df.mapInPandas(
+        sink,
+        "partition_id int, fingerprint long, row_count long, bytes long, "
+        "path string, skipped boolean, col_stats string",
+    ).collect()
+    return {
+        str(r.partition_id): {
+            "fingerprint": int(r.fingerprint),
+            "row_count": int(r.row_count),
+            "bytes": int(r.bytes),
+            "path": r.path,
+            "status": "committed",
+            "skipped_on_last_run": bool(r.skipped),
+            "stats": json.loads(r.col_stats),
+        }
+        for r in rows
+    }
+
+
+def _new_manifest(
+    version: int, lineage: str, schema, parts: dict, bloom_cols, bloom_fpp: float
+) -> dict:
+    """A snapshot's manifest over ``parts``; ``bloom_cols``/``bloom_fpp``
+    persist as table properties when blooms are on."""
+    manifest = {
+        "version": version,
+        "lineage": lineage,
+        "schema": schema,
+        "committed_at": time.time(),
+        "total_rows": sum(int(p["row_count"]) for p in parts.values()),
+        "partitions": parts,
+    }
+    if bloom_cols:
+        manifest["bloom_cols"] = list(bloom_cols)
+        manifest["bloom_fpp"] = float(bloom_fpp)
+    return manifest
+
+
 def write_checkpointed(
     df: DataFrame,
     out_dir: str,
@@ -1168,59 +1288,9 @@ def write_checkpointed(
     # rate — inherit the persisted value, else the 0.01 default
     if bloom_fpp is None:
         bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    spark = df.sparkSession
-    bc_committed = spark.sparkContext.broadcast(committed)
     if num_partitions:
         df = df.repartition(num_partitions)
-    arrow_schema = _arrow_schema_of(df)
-
-    def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-        parts = [b for b in batches if len(b)]
-        pdf = pd.concat(parts, ignore_index=True) if parts else pd.DataFrame()
-        fp = _fingerprint_pdf(pdf)
-        # content-addressed: a changed partition writes a NEW object, the
-        # old one stays referenced by the previous snapshot (time travel)
-        key = f"part-{pid:05d}-{fp:016x}.parquet"
-        skipped = bc_committed.value.get(pid) == fp and store.exists(out_dir, key)
-        if not skipped:
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, key, table)
-        yield pd.DataFrame(
-            {
-                "partition_id": [pid],
-                "fingerprint": [fp],
-                "row_count": [len(pdf)],
-                "bytes": [store.size(out_dir, key)],
-                "path": [key],
-                "skipped": [skipped],
-                "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key))],
-            }
-        )
-
-    stats_schema = (
-        "partition_id int, fingerprint long, row_count long, bytes long, "
-        "path string, skipped boolean, col_stats string"
-    )
-    stats = df.mapInPandas(sink, stats_schema).collect()
-
-    new_parts = {
-            str(r.partition_id): {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": bool(r.skipped),
-                "stats": json.loads(r.col_stats),
-            }
-            for r in stats
-    }
+    new_parts = _write_parts(df, store, out_dir, base_pid, bloom_cols, bloom_fpp, committed)
     # Iceberg commit loop: target the latest committed version + 1 and
     # let the exclusive root create arbitrate. On conflict, reload the
     # base — and in append mode RE-MERGE onto the rival's partitions
@@ -1233,17 +1303,10 @@ def write_checkpointed(
     base_version = int(prior.get("version", 0) or 0)
     for _attempt in range(1000):
         all_parts = {**prior_parts, **new_parts} if mode == "append" else new_parts
-        manifest = {
-            "version": base_version + 1,
-            "lineage": lineage,
-            "schema": df.schema.simpleString(),
-            "committed_at": time.time(),
-            "total_rows": int(sum(int(p["row_count"]) for p in all_parts.values())),
-            "partitions": all_parts,
-        }
-        if bloom_cols:
-            manifest["bloom_cols"] = list(bloom_cols)
-            manifest["bloom_fpp"] = float(bloom_fpp)
+        manifest = _new_manifest(
+            base_version + 1, lineage, df.schema.simpleString(), all_parts,
+            bloom_cols, bloom_fpp,
+        )
         if _try_commit(store, out_dir, manifest, shard_size=shard_size):
             return manifest
         base = _load_committed(store, out_dir)
@@ -1269,13 +1332,7 @@ def read_snapshot(spark, out_dir: str, version: int | None = None, storage=None)
     phantom rows). ``version=None`` reads the latest commit; an integer
     time-travels to that archived snapshot."""
     store = storage or LocalStorage()
-    if version is None:
-        m = load_manifest(out_dir, store)
-    else:
-        text = store.get_text(out_dir, f"{MANIFESTS_DIR}/manifest-{version:06d}.json")
-        if text is None:
-            raise FileNotFoundError(f"no snapshot version {version} under {out_dir}")
-        m = _resolve_partitions(json.loads(text), out_dir, store)
+    m = _load_version(store, out_dir, version)
     keys = [_part_key(meta["path"]) for meta in m.get("partitions", {}).values()]
     if not keys:
         raise ValueError(f"snapshot has no committed partitions: {out_dir} v{version}")
@@ -1507,133 +1564,93 @@ def scan_bbox(
     return df, report
 
 
+def _cow_commit(
+    spark, out_dir: str, store, shard_size: int, op: str, may_match, rewrite, describe
+) -> dict:
+    """The copy-on-write commit loop every row-level DML op runs.
+
+    Each attempt loads the latest committed base and splits its part
+    files with ``may_match(meta)``. Files it rules out carry over into
+    the new snapshot BY REFERENCE (content-addressed, so snapshots share
+    them); at 10^12 rows a clustered-key DML rewrites O(matching files),
+    not the table. ``rewrite(prior, old)`` maps ``old`` — the rows of the
+    affected files, None when no file is affected — to the rows that
+    replace them, written by :func:`_write_parts` as new part files (None
+    writes nothing). ``describe(report, parts, total_rows)`` adds the
+    op's fields to ``report`` and returns the snapshot's lineage string.
+
+    The commit is optimistic: if a rival commit lands between the base
+    read and the root create, ``_try_commit`` fails and the whole pass
+    re-runs on the new base (a rewrite derived from a replaced snapshot
+    can't be merged; part files of a lost attempt become orphans that
+    vacuum's grace window collects). ``shard_size`` is threaded through
+    so a rewrite of a sharded-manifest table stays sharded."""
+    for _attempt in range(8):
+        prior = _load_committed(store, out_dir)
+        parts = prior.get("partitions", {})
+        if not parts:
+            raise ValueError(f"{op}: no committed snapshot under {out_dir}")
+        affected = {pid: meta for pid, meta in parts.items() if may_match(meta)}
+        entries = {pid: meta for pid, meta in parts.items() if pid not in affected}
+        old = _read_parts(
+            spark, out_dir, [_part_key(m["path"]) for m in affected.values()], store, prior
+        ) if affected else None
+        frame = rewrite(prior, old)
+        bloom_cols, bloom_fpp = prior.get("bloom_cols"), float(prior.get("bloom_fpp", 0.01))
+        if frame is not None:
+            n_parts = len(affected) or max(1, spark.sparkContext.defaultParallelism // 4)
+            base_pid = max(int(p) for p in parts) + 1
+            entries.update(_write_parts(
+                frame.repartition(n_parts), store, out_dir, base_pid, bloom_cols, bloom_fpp
+            ))
+        manifest = _new_manifest(
+            int(prior.get("version", 0) or 0) + 1, "", prior.get("schema"), entries,
+            bloom_cols, bloom_fpp,
+        )
+        report = {"files_total": len(parts), "files_rewritten": len(affected)}
+        manifest["lineage"] = describe(report, parts, manifest["total_rows"])
+        manifest[op.split("_")[0] + "_report"] = report
+        if _try_commit(store, out_dir, manifest, shard_size=shard_size):
+            return manifest
+    raise RuntimeError(f"{op}: commit conflict persisted after 8 retries under {out_dir}")
+
+
+def _rewritten(report: dict) -> str:
+    return f"{report['files_rewritten']}/{report['files_total']} files rewritten"
+
+
 def delete_where(spark, out_dir: str, filters, storage=None, shard_size: int = 8192) -> dict:
     """Row-level DELETE, Iceberg copy-on-write style with FILE-LEVEL
-    pruning: part files whose column stats prove no row matches the
-    predicate conjunction carry over into the new snapshot BY REFERENCE
-    (content-addressed, so snapshots share them); only files that may
-    contain matching rows are read, filtered, and rewritten. At 10^12
-    rows a clustered-key delete rewrites O(matching files), not the
-    table. Deleting is just another commit: the previous snapshot stays
-    readable by version until vacuum; concurrent committers are resolved
-    by the Iceberg commit loop — if a rival commit lands between our
-    base read and our root create, the whole operation RETRIES against
-    the new base (a rewrite derived from a replaced snapshot can't be
-    merged; part files written by a lost attempt become orphans that
-    vacuum's grace window collects).
+    pruning (see :func:`_cow_commit`): files whose column stats prove no
+    row matches the predicate conjunction carry over by reference; only
+    files that may contain matching rows are read, filtered, and
+    rewritten. Deleting is just another commit: the previous snapshot
+    stays readable by version until vacuum. A row whose predicate is
+    NULL — including a literal that does not parse as the column's
+    type — is never deleted (SQL three-valued logic).
 
     Returns the new manifest plus a ``delete_report`` entry
     {files_total, files_rewritten, rows_before, rows_deleted}."""
+    filters = _check_filters("delete_where", filters)
+    if not filters:
+        raise ValueError("delete_where: filters is empty; name at least one (col, op, value)")
     store = storage or LocalStorage()
-    for _attempt in range(8):
-        manifest = _delete_where_once(spark, out_dir, filters, store, shard_size)
-        if manifest is not None:
-            return manifest
-    raise RuntimeError(
-        f"delete_where: commit conflict persisted after 8 retries under {out_dir}"
+
+    def rewrite(_prior, old):
+        if old is None:
+            return None
+        pred = _filter_predicate(old, filters)
+        return old.filter((~pred) | pred.isNull())
+
+    def describe(report, parts, rows_after):
+        rows_before = sum(int(p["row_count"]) for p in parts.values())
+        report.update(rows_before=rows_before, rows_deleted=rows_before - rows_after)
+        return f"delete_where {filters!r} ({_rewritten(report)})"
+
+    return _cow_commit(
+        spark, out_dir, store, shard_size, "delete_where",
+        lambda meta: _file_may_match(meta, filters, store, out_dir), rewrite, describe,
     )
-
-
-def _delete_where_once(spark, out_dir: str, filters, store, shard_size: int) -> dict | None:
-    from pyspark.sql import functions as F
-
-    prior = _load_committed(store, out_dir)
-    bloom_cols = prior.get("bloom_cols")
-    bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    parts = prior.get("partitions", {})
-    if not parts:
-        raise ValueError(f"delete_where: no committed snapshot under {out_dir}")
-    affected, kept_entries = {}, {}
-    for pid, meta in parts.items():
-        if _file_may_match(
-            meta.get("stats") or {}, int(meta["row_count"]), filters,
-            bloom_ctx=(store, out_dir),
-        ):
-            affected[pid] = meta
-        else:
-            kept_entries[pid] = meta
-    rows_before = sum(int(p["row_count"]) for p in parts.values())
-    report = {
-        "files_total": len(parts),
-        "files_rewritten": len(affected),
-        "rows_before": rows_before,
-        "rows_deleted": 0,
-    }
-    new_entries = dict(kept_entries)
-    if affected:
-        df = _read_parts(
-            spark, out_dir,
-            [_part_key(m["path"]) for m in affected.values()], store, prior,
-        )
-        keep_pred = None
-        for col, op, value in filters:
-            c = _FILTER_OPS[op](F.col(col), value)
-            keep_pred = c if keep_pred is None else (keep_pred & c)
-        # NULL predicate values never match a delete (SQL three-valued
-        # logic): such rows survive
-        survivors = df.filter((~keep_pred) | keep_pred.isNull())
-        base_pid = max((int(p) for p in parts), default=-1) + 1
-        arrow_schema = _arrow_schema_of(df)
-
-        def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ctx = TaskContext.get()
-            pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-            pdfs = [b for b in batches if len(b)]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame()
-            fp = _fingerprint_pdf(pdf)
-            key = f"part-{pid:05d}-{fp:016x}.parquet"
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, key, table)
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid], "fingerprint": [fp],
-                    "row_count": [len(pdf)], "bytes": [store.size(out_dir, key)],
-                    "path": [key], "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key))],
-                }
-            )
-
-        n_parts = max(1, len(affected))
-        stats = (
-            survivors.repartition(n_parts)
-            .mapInPandas(
-                sink,
-                "partition_id int, fingerprint long, row_count long, bytes long, "
-                "path string, col_stats string",
-            )
-            .collect()
-        )
-        for r in stats:
-            new_entries[str(r.partition_id)] = {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": False,
-                "stats": json.loads(r.col_stats),
-            }
-    rows_after = sum(int(p["row_count"]) for p in new_entries.values())
-    report["rows_deleted"] = rows_before - rows_after
-
-    manifest = {
-        "version": int(prior.get("version", 0) or 0) + 1,
-        "lineage": f"delete_where {filters!r} ({report['files_rewritten']}/{report['files_total']} files rewritten)",
-        "schema": prior.get("schema"),
-        **({"bloom_cols": list(prior["bloom_cols"]), "bloom_fpp": bloom_fpp} if prior.get("bloom_cols") else {}),
-        "committed_at": time.time(),
-        "total_rows": rows_after,
-        "partitions": new_entries,
-        "delete_report": report,
-    }
-    # conflict => None: the caller retries the whole CoW pass on the new base
-    # shard_size threaded through (round-4 ADVICE): a DML rewrite of a
-    # sharded-manifest table must not inline 10^5-10^6 partitions back
-    # into a single root JSON
-    return manifest if _try_commit(store, out_dir, manifest, shard_size=shard_size) else None
 
 
 def update_where(spark, out_dir: str, filters, set_exprs: dict, storage=None, shard_size: int = 8192) -> dict:
@@ -1641,112 +1658,39 @@ def update_where(spark, out_dir: str, filters, set_exprs: dict, storage=None, sh
     :func:`delete_where`: files whose stats exclude the predicate carry
     over by reference; affected files are read once and rewritten with
     ``set_exprs`` (column -> Spark Column/literal) applied to matching
-    rows only (NULL predicates never match). Completes the DML triad
-    next to write (insert/overwrite), merge_upsert, and delete_where."""
-    store = storage or LocalStorage()
-    for _attempt in range(8):
-        manifest = _update_where_once(spark, out_dir, filters, set_exprs, store, shard_size)
-        if manifest is not None:
-            return manifest
-    raise RuntimeError(
-        f"update_where: commit conflict persisted after 8 retries under {out_dir}"
-    )
-
-
-def _update_where_once(spark, out_dir: str, filters, set_exprs: dict, store, shard_size: int) -> dict | None:
+    rows only (NULL predicates never match). A ``set_exprs`` value must
+    keep its column's type. Completes the DML triad next to write
+    (insert/overwrite), merge_into, and delete_where."""
     from pyspark.sql import Column
     from pyspark.sql import functions as F
 
-    prior = _load_committed(store, out_dir)
-    bloom_cols = prior.get("bloom_cols")
-    bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    parts = prior.get("partitions", {})
-    if not parts:
-        raise ValueError(f"update_where: no committed snapshot under {out_dir}")
-    affected, kept_entries = {}, {}
-    for pid, meta in parts.items():
-        if _file_may_match(
-            meta.get("stats") or {}, int(meta["row_count"]), filters,
-            bloom_ctx=(store, out_dir),
-        ):
-            affected[pid] = meta
-        else:
-            kept_entries[pid] = meta
-    report = {"files_total": len(parts), "files_rewritten": len(affected)}
-    new_entries = dict(kept_entries)
-    if affected:
-        df = _read_parts(
-            spark, out_dir,
-            [_part_key(m["path"]) for m in affected.values()], store, prior,
-        )
-        pred = None
-        for col, op, value in filters:
-            c = _FILTER_OPS[op](F.col(col), value)
-            pred = c if pred is None else (pred & c)
-        updated = df
+    filters = _check_filters("update_where", filters)
+    if not filters:
+        raise ValueError("update_where: filters is empty; name at least one (col, op, value)")
+    store = storage or LocalStorage()
+
+    def rewrite(_prior, old):
+        if old is None:
+            return None
+        pred = _filter_predicate(old, filters)
+        updated = old
         for col, expr in set_exprs.items():
             val = expr if isinstance(expr, Column) else F.lit(expr)
-            updated = updated.withColumn(
-                col, F.when(pred, val).otherwise(F.col(col))
+            updated = updated.withColumn(col, F.when(pred, val).otherwise(F.col(col)))
+        # part files are written under the rewrite frame's own types; a
+        # widened column would no longer match the snapshot's schema
+        if updated.schema.simpleString() != old.schema.simpleString():
+            raise ValueError(
+                f"update_where: set_exprs change the table schema "
+                f"{old.schema.simpleString()} -> {updated.schema.simpleString()}"
             )
-        base_pid = max((int(p) for p in parts), default=-1) + 1
-        arrow_schema = _arrow_schema_of(df)
+        return updated
 
-        def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ctx = TaskContext.get()
-            pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-            pdfs = [b for b in batches if len(b)]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame()
-            fp = _fingerprint_pdf(pdf)
-            key = f"part-{pid:05d}-{fp:016x}.parquet"
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, key, table)
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid], "fingerprint": [fp],
-                    "row_count": [len(pdf)], "bytes": [store.size(out_dir, key)],
-                    "path": [key], "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, key))],
-                }
-            )
-
-        stats = (
-            updated.repartition(max(1, len(affected)))
-            .mapInPandas(
-                sink,
-                "partition_id int, fingerprint long, row_count long, bytes long, "
-                "path string, col_stats string",
-            )
-            .collect()
-        )
-        for r in stats:
-            new_entries[str(r.partition_id)] = {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": False,
-                "stats": json.loads(r.col_stats),
-            }
-    manifest = {
-        "version": int(prior.get("version", 0) or 0) + 1,
-        "lineage": f"update_where {filters!r} ({report['files_rewritten']}/{report['files_total']} files rewritten)",
-        "schema": prior.get("schema"),
-        **({"bloom_cols": list(prior["bloom_cols"]), "bloom_fpp": bloom_fpp} if prior.get("bloom_cols") else {}),
-        "committed_at": time.time(),
-        "total_rows": sum(int(p["row_count"]) for p in new_entries.values()),
-        "partitions": new_entries,
-        "update_report": report,
-    }
-    # conflict => None: the caller retries the whole CoW pass on the new base
-    # shard_size threaded through (round-4 ADVICE): a DML rewrite of a
-    # sharded-manifest table must not inline 10^5-10^6 partitions back
-    # into a single root JSON
-    return manifest if _try_commit(store, out_dir, manifest, shard_size=shard_size) else None
+    return _cow_commit(
+        spark, out_dir, store, shard_size, "update_where",
+        lambda meta: _file_may_match(meta, filters, store, out_dir), rewrite,
+        lambda report, _parts, _rows: f"update_where {filters!r} ({_rewritten(report)})",
+    )
 
 
 def merge_into(
@@ -1775,72 +1719,42 @@ def merge_into(
     unique (multiple source rows per key would make the merge result
     order-dependent — same rule Iceberg enforces by raising).
 
-    Commit follows the DML retry protocol: optimistic commit via
-    exclusive-create; on conflict the whole CoW pass re-runs on the new
-    base (8 attempts)."""
-    store = storage or LocalStorage()
-    # pin the source: it is read up to three times per attempt (profile
-    # aggregate, key collect, anti-join) and again on commit retry — a
-    # non-deterministic source would otherwise pass the uniqueness/null
-    # checks yet merge a DIFFERENT key set. The profile aggregate below
-    # is a full pass, so it materializes the cache before any reuse.
-    source = source.persist()
-    try:
-        for _attempt in range(8):
-            manifest = _merge_into_once(
-                spark, out_dir, source, key, store, shard_size, max_probe_keys
-            )
-            if manifest is not None:
-                return manifest
-    finally:
-        source.unpersist()
-    raise RuntimeError(f"merge_into: commit conflict persisted after 8 retries under {out_dir}")
-
-
-def _merge_into_once(
-    spark, out_dir: str, source, key: str, store, shard_size: int, max_probe_keys: int
-) -> dict | None:
+    Commit follows the DML retry protocol of :func:`_cow_commit`: on
+    conflict the whole CoW pass re-runs on the new base (8 attempts)."""
     from pyspark.sql import functions as F
 
-    prior = _load_committed(store, out_dir)
-    bloom_cols = prior.get("bloom_cols")
-    bloom_fpp = float(prior.get("bloom_fpp", 0.01))
-    parts = prior.get("partitions", {})
-    if not parts:
-        raise ValueError(f"merge_into: no committed snapshot under {out_dir}")
-    table_schema = _snapshot_spark_schema(
-        spark, store, out_dir, prior, [_part_key(m["path"]) for m in parts.values()]
-    )
-    if sorted(source.columns) != sorted(table_schema.fieldNames()):
-        raise ValueError(
-            f"merge_into: source columns {sorted(source.columns)} != table "
-            f"columns {sorted(table_schema.fieldNames())} (MERGE is whole-row; "
-            "project/null-fill the source first)"
-        )
+    store = storage or LocalStorage()
     if key not in source.columns:
         raise ValueError(f"merge_into: key column {key!r} not in source")
-    # one source pass for the key profile: distinct/duplicate/null counts
-    # + bounds — everything the prune decision needs, as ONE aggregate
-    prof = source.agg(
-        F.count("*").alias("n"),
-        F.count(key).alias("n_nonnull"),
-        F.countDistinct(key).alias("n_keys"),
-        F.min(key).alias("mn"),
-        F.max(key).alias("mx"),
-    ).collect()[0]
-    if int(prof.n) == 0:
-        # empty merge: no-op, but still a committed snapshot for lineage
-        new_entries = dict(parts)
-        report = {"files_total": len(parts), "files_rewritten": 0, "source_rows": 0}
-    else:
-        if int(prof.n_nonnull) != int(prof.n):
+    # pin the source: it is read by the profile aggregate, the key
+    # collect and every attempt's anti-join — a non-deterministic source
+    # would otherwise pass the uniqueness/null checks yet merge a
+    # DIFFERENT key set. The profile aggregate is a full pass, so it
+    # materializes the cache before any reuse.
+    source = source.persist()
+    try:
+        # one source pass for the key profile: distinct/duplicate/null
+        # counts + bounds — everything the prune decision needs
+        prof = source.agg(
+            F.count("*").alias("n"),
+            F.count(key).alias("n_nonnull"),
+            F.countDistinct(key).alias("n_keys"),
+            F.min(key).alias("mn"),
+            F.max(key).alias("mx"),
+        ).collect()[0]
+        n = int(prof.n)
+        if int(prof.n_nonnull) != n:
             raise ValueError("merge_into: source has NULL merge keys")
-        if int(prof.n_keys) != int(prof.n):
+        if int(prof.n_keys) != n:
             raise ValueError(
-                f"merge_into: source keys not unique ({int(prof.n)} rows, "
+                f"merge_into: source keys not unique ({n} rows, "
                 f"{int(prof.n_keys)} distinct {key!r}) — pre-aggregate the source"
             )
-        if int(prof.n_keys) <= max_probe_keys:
+        if not n:
+            def may_match(meta: dict) -> bool:
+                return False  # empty merge: a committed no-op snapshot for lineage
+
+        elif n <= max_probe_keys:
             import bisect
 
             key_vals = sorted(r[0] for r in source.select(key).collect())
@@ -1849,8 +1763,7 @@ def _merge_into_once(
                 # sorted-key fast path: bisect the file's [lo, hi] range
                 # once instead of scanning all K keys per file, and feed
                 # only the in-range slice to the Bloom probe
-                stats = meta.get("stats") or {}
-                ent = stats.get(key) or {}
+                ent = (meta.get("stats") or {}).get(key) or {}
                 lo, hi = ent.get("lo"), ent.get("hi")
                 cand = key_vals
                 if lo is not None and hi is not None:
@@ -1862,102 +1775,42 @@ def _merge_into_once(
                     if i >= j:
                         return False
                     cand = key_vals[i:j]
-                return _file_may_match(
-                    stats, int(meta["row_count"]), [(key, "in", cand)],
-                    bloom_ctx=(store, out_dir),
-                )
+                return _file_may_match(meta, [(key, "in", cand)], store, out_dir)
 
         else:
             range_probe = [(key, ">=", prof.mn), (key, "<=", prof.mx)]
 
             def may_match(meta: dict) -> bool:
-                return _file_may_match(
-                    meta.get("stats") or {}, int(meta["row_count"]), range_probe,
-                    bloom_ctx=(store, out_dir),
+                return _file_may_match(meta, range_probe, store, out_dir)
+
+        def rewrite(prior, old):
+            cols = _snapshot_spark_schema(
+                spark, store, out_dir, prior,
+                [_part_key(m["path"]) for m in prior["partitions"].values()],
+            ).fieldNames()
+            if sorted(source.columns) != sorted(cols):
+                raise ValueError(
+                    f"merge_into: source columns {sorted(source.columns)} != table "
+                    f"columns {sorted(cols)} (MERGE is whole-row; "
+                    "project/null-fill the source first)"
                 )
+            if not n:
+                return None
+            src = source.select(*cols)
+            if old is None:
+                return src
+            survivors = old.join(src.select(key), on=key, how="left_anti").select(*cols)
+            return survivors.unionByName(src)
 
-        affected, kept_entries = {}, {}
-        for pid, meta in parts.items():
-            if may_match(meta):
-                affected[pid] = meta
-            else:
-                kept_entries[pid] = meta
-        report = {
-            "files_total": len(parts),
-            "files_rewritten": len(affected),
-            "source_rows": int(prof.n),
-        }
-        src = source.select(*table_schema.fieldNames())
-        if affected:
-            old = _read_parts(
-                spark, out_dir,
-                [_part_key(m["path"]) for m in affected.values()], store, prior,
-            )
-            survivors = old.join(src.select(key), on=key, how="left_anti").select(
-                *table_schema.fieldNames()
-            )
-            rewrite_df = survivors.unionByName(src)
-        else:
-            rewrite_df = src
-        base_pid = max((int(p) for p in parts), default=-1) + 1
-        arrow_schema = _arrow_schema_of(rewrite_df)
+        def describe(report, _parts, _rows):
+            report["source_rows"] = n
+            return f"merge_into on {key!r} ({_rewritten(report)}, {n} source rows)"
 
-        def sink(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            ctx = TaskContext.get()
-            pid = (ctx.partitionId() if ctx is not None else 0) + base_pid
-            pdfs = [b for b in batches if len(b)]
-            pdf = pd.concat(pdfs, ignore_index=True) if pdfs else pd.DataFrame()
-            fp = _fingerprint_pdf(pdf)
-            part_key = f"part-{pid:05d}-{fp:016x}.parquet"
-            table = _spark_readable(
-                pa.Table.from_pandas(pdf, schema=arrow_schema, preserve_index=False)
-                if len(pdf)
-                else arrow_schema.empty_table()
-            )
-            store.put_table(out_dir, part_key, table)
-            yield pd.DataFrame(
-                {
-                    "partition_id": [pid], "fingerprint": [fp],
-                    "row_count": [len(pdf)], "bytes": [store.size(out_dir, part_key)],
-                    "path": [part_key],
-                    "col_stats": [json.dumps(_col_stats_sidecar_blooms(_col_stats(pdf, bloom_cols, bloom_fpp), store, out_dir, part_key))],
-                }
-            )
-
-        n_rewrite_parts = max(1, len(affected)) if affected else max(
-            1, spark.sparkContext.defaultParallelism // 4
+        return _cow_commit(
+            spark, out_dir, store, shard_size, "merge_into", may_match, rewrite, describe
         )
-        stats = (
-            rewrite_df.repartition(n_rewrite_parts)
-            .mapInPandas(
-                sink,
-                "partition_id int, fingerprint long, row_count long, bytes long, "
-                "path string, col_stats string",
-            )
-            .collect()
-        )
-        new_entries = dict(kept_entries)
-        for r in stats:
-            new_entries[str(r.partition_id)] = {
-                "fingerprint": int(r.fingerprint),
-                "row_count": int(r.row_count),
-                "bytes": int(r.bytes),
-                "path": r.path,
-                "status": "committed",
-                "skipped_on_last_run": False,
-                "stats": json.loads(r.col_stats),
-            }
-    manifest = {
-        "version": int(prior.get("version", 0) or 0) + 1,
-        "lineage": f"merge_into on {key!r} ({report['files_rewritten']}/{report['files_total']} files rewritten, {report['source_rows']} source rows)",
-        "schema": prior.get("schema"),
-        **({"bloom_cols": list(prior["bloom_cols"]), "bloom_fpp": bloom_fpp} if prior.get("bloom_cols") else {}),
-        "committed_at": time.time(),
-        "total_rows": sum(int(p["row_count"]) for p in new_entries.values()),
-        "partitions": new_entries,
-        "merge_report": report,
-    }
-    return manifest if _try_commit(store, out_dir, manifest, shard_size=shard_size) else None
+    finally:
+        source.unpersist()
 
 
 def read_incremental(
@@ -1970,17 +1823,8 @@ def read_incremental(
     rewrote data — the diff is then not an append stream; consume such
     tables by full snapshot instead)."""
     store = storage or LocalStorage()
-
-    def _load(v):
-        if v is None:
-            return load_manifest(out_dir, store)
-        text = store.get_text(out_dir, f"{MANIFESTS_DIR}/manifest-{v:06d}.json")
-        if text is None:
-            raise FileNotFoundError(f"no snapshot version {v} under {out_dir}")
-        return _resolve_partitions(json.loads(text), out_dir, store)
-
-    m_from = _load(from_version)
-    m_to = _load(to_version)
+    m_from = _load_version(store, out_dir, from_version)
+    m_to = _load_version(store, out_dir, to_version)
     keys_from = {_part_key(p["path"]) for p in m_from.get("partitions", {}).values()}
     keys_to = {_part_key(p["path"]) for p in m_to.get("partitions", {}).values()}
     removed = keys_from - keys_to

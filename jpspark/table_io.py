@@ -104,15 +104,12 @@ class TableIO:
         whose manifest column stats admit ``filters`` (Iceberg's
         data-file pruning; see manifest.scan). On an Iceberg catalog the
         runtime does this natively, so scan() is just read()+filter."""
-        from pyspark.sql import functions as F
-
         from . import manifest as mf
 
         if self.catalog:
+            filters = mf._check_filters("scan", filters)
             df = self.read(name, version=version)
-            for col, op, value in filters:
-                df = df.filter(mf._FILTER_OPS[op](F.col(col), value))
-            return df, {"backend": "iceberg"}
+            return df.filter(mf._filter_predicate(df, filters)), {"backend": "iceberg"}
         return mf.scan(
             self.spark, self._path(name), filters, version=version, storage=self.storage
         )

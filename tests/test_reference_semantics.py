@@ -617,11 +617,12 @@ def test_occ_append_remerges_interleaved_commit(spark, tmp_path, kind):
     assert mf.load_manifest(out_dir, storage=store)["version"] == 3
 
 
-def test_occ_delete_retries_on_interleaved_commit(spark, tmp_path):
-    """A CoW DELETE computed against a replaced snapshot must abort and
+@pytest.mark.parametrize("op", ["delete_where", "update_where", "merge_into"])
+def test_occ_delete_retries_on_interleaved_commit(spark, tmp_path, op):
+    """A CoW DML op computed against a replaced snapshot must abort and
     re-run on the new base (a rewrite cannot be merged): rival appends
-    ids 1000..1099 after our base read; the delete of id < 100 must
-    still see them."""
+    ids 1000..1099 after our base read; the op (delete/update id < 100,
+    merge of keys 1050..1149) must still see them."""
     out_dir = str(tmp_path / "occdel")
     df = spark.range(1000).withColumn("v", F.col("id") * 2).repartitionByRange(8, "id")
     mf.write_checkpointed(df, out_dir)
@@ -629,13 +630,104 @@ def test_occ_delete_retries_on_interleaved_commit(spark, tmp_path):
         spark.range(1000, 1100).withColumn("v", F.col("id") * 2), out_dir,
         mode="append", num_partitions=1,
     )
+    files_v2 = len(mf.load_manifest(out_dir)["partitions"])
     stale = _StaleReadStorage(mf.LocalStorage(), visible_version=1)
-    m = mf.delete_where(spark, out_dir, [("id", "<", 100)], storage=stale)
+    if op == "delete_where":
+        m = mf.delete_where(spark, out_dir, [("id", "<", 100)], storage=stale)
+        assert m["delete_report"]["rows_before"] == 1100  # recomputed on v2
+        n_rows, n_changed = 1000, 0
+    elif op == "update_where":
+        m = mf.update_where(spark, out_dir, [("id", "<", 100)], {"v": F.lit(-1)}, storage=stale)
+        n_rows, n_changed = 1100, 100
+    else:
+        src = spark.range(1050, 1150).withColumn("v", F.lit(-1))
+        m = mf.merge_into(spark, out_dir, src, key="id", storage=stale)
+        n_rows, n_changed = 1150, 100
     assert m["version"] == 3
-    assert m["delete_report"]["rows_before"] == 1100  # recomputed on v2
+    assert m[op.split("_")[0] + "_report"]["files_total"] == files_v2
     back = mf.read_snapshot(spark, out_dir)
-    assert back.count() == 1000
-    assert back.filter(F.col("id") >= 1000).count() == 100  # rival rows intact
+    assert back.count() == n_rows
+    assert back.select("id").distinct().count() == n_rows
+    assert back.filter(F.col("v") == -1).count() == n_changed
+    # rival rows no op touched are intact
+    assert back.filter(
+        (F.col("id") >= 1000) & (F.col("id") < 1050) & (F.col("v") == F.col("id") * 2)
+    ).count() == 50
+
+
+@pytest.mark.parametrize("literal", ["abc", 5.5])
+@pytest.mark.parametrize("op", ["scan", "delete_where", "update_where"])
+def test_filter_literal_not_in_column_type_matches_no_row(spark, tmp_path, op, literal):
+    """scan and DML share one predicate builder: a literal that is no
+    value of the bigint column — unparseable ("abc") or fractional (5.5)
+    — matches no row in every op, instead of raising CAST_INVALID_INPUT
+    mid-job (DML) or being truncated to 5 (scan)."""
+    out = str(tmp_path / "t")
+    mf.write_checkpointed(spark.range(100).withColumn("v", F.col("id") * 2), out, num_partitions=2)
+    flt = [("id", "=", literal)]
+    if op == "scan":
+        got, _ = mf.scan(spark, out, flt)
+        assert got.count() == 0
+    elif op == "delete_where":
+        m = mf.delete_where(spark, out, flt)
+        assert m["delete_report"]["rows_deleted"] == 0
+    else:
+        mf.update_where(spark, out, flt, {"v": F.lit(-1)})
+    back = mf.read_snapshot(spark, out)
+    assert back.count() == 100
+    assert back.filter(F.col("v") != F.col("id") * 2).count() == 0
+
+
+@pytest.mark.parametrize("op", ["scan", "delete_where", "update_where"])
+def test_bad_filters_raise_before_any_job(spark, tmp_path, op):
+    """Malformed filters raise ValueError at entry — no Spark job runs —
+    instead of a bare KeyError after the stats pass (unknown op) or a
+    TypeError/PySparkTypeError mid-build (empty DML conjunction)."""
+    out = str(tmp_path / "t")
+    mf.write_checkpointed(spark.range(10).withColumn("v", F.lit(1)), out, num_partitions=1)
+    run = {
+        "scan": lambda f: mf.scan(spark, out, f),
+        "delete_where": lambda f: mf.delete_where(spark, out, f),
+        "update_where": lambda f: mf.update_where(spark, out, f, {"v": F.lit(0)}),
+    }[op]
+    bad = [
+        ([("id", "!=", 1)], "allowed ops: =, <, <=, >, >=, in"),
+        ([("id", "in", 5)], "collection"),
+        ([("id", "=")], "triple"),
+    ]
+    if op != "scan":
+        bad.append(([], "empty"))
+    sc = spark.sparkContext
+    group = f"bad-filters-{op}"
+    sc.setJobGroup(group, "malformed filters")
+    try:
+        for flt, msg in bad:
+            with pytest.raises(ValueError, match=msg):
+                run(flt)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert mf.load_manifest(out)["version"] == 1
+
+
+def _fingerprint_loop_fold(pdf: pd.DataFrame) -> int:
+    """The per-row Python fold _fingerprint_pdf used before its numpy
+    sum: every manifest written with it must keep resume-skipping."""
+    if not len(pdf):
+        return 0
+    total = 0
+    for v in pd.util.hash_pandas_object(pdf, index=False).to_numpy().astype(np.uint64):
+        total = (total + int(v)) & 0xFFFFFFFFFFFFFFFF
+    return (total ^ (len(pdf) << 1)) & 0x7FFFFFFFFFFFFFFF
+
+
+@pytest.mark.parametrize("n", [0, 1, 1000])
+def test_fingerprint_matches_loop_fold(n):
+    pdf = pd.DataFrame({"id": np.arange(n, dtype=np.int64), "s": [f"r{i}" for i in range(n)]})
+    if n > 1:  # the row hashes overflow uint64, so the wrap is exercised
+        assert sum(int(v) for v in pd.util.hash_pandas_object(pdf, index=False)) >= 2**64
+    assert mf._fingerprint_pdf(pdf) == _fingerprint_loop_fold(pdf)
 
 
 def test_live_pointer_never_rolls_back(spark, tmp_path):
@@ -887,6 +979,17 @@ def test_update_where_partial_copy_on_write(spark, tmp_path):
     assert back.filter(F.col("id") >= 900).filter(F.col("v") == -1).count() == 100
     assert back.filter((F.col("id") < 900) & (F.col("v") != F.col("id") * 2)).count() == 0
     assert mf.read_snapshot(spark, out, version=1).filter(F.col("v") == -1).count() == 0
+
+
+def test_update_where_rejects_type_change(spark, tmp_path):
+    """Rewritten part files take the rewrite frame's types, so a SET
+    value that widens its column (1.5 into bigint) is refused before any
+    write instead of committing double files under a bigint schema."""
+    out = str(tmp_path / "upd_type")
+    mf.write_checkpointed(spark.range(10).withColumn("v", F.col("id") * 2), out, num_partitions=1)
+    with pytest.raises(ValueError, match="change the table schema"):
+        mf.update_where(spark, out, [("id", "<", 5)], {"v": F.lit(1.5)})
+    assert mf.load_manifest(out)["version"] == 1
 
 
 def test_merge_into_partial_copy_on_write(spark, tmp_path):
