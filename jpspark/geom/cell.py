@@ -21,13 +21,36 @@ grid is 2^r × 2^r. Cells are half-open: a point on a shared edge belongs to
 the cell to its east/north — matching the half-open floor convention used by
 the PIP kernel and tile math so the three never disagree.
 
-All functions accept scalars or NumPy arrays and stay in int64/float64 —
-safe inside Arrow-vectorized pandas UDFs (no per-row Python).
+The NumPy functions accept scalars or NumPy arrays and stay in
+int64/float64 — safe inside Arrow-vectorized kernels (no per-row Python).
+
+The same layout as Spark Column expressions, for DataFrame operators
+(built-in functions only, so no row crosses into Python; every one
+equals its NumPy twin on every double, element order included):
+
+    grid_xy_col(lon, lat, res)           -> (x, y) grid coords   (_grid_xy)
+    from_xy_col(x, y, res)               -> cell id              (from_xy)
+    to_xy_col(cell)                      -> (x, y, res)          (to_xy)
+    encode_col(lon, lat, res)            -> cell id              (encode)
+    cover_col(xmin, ymin, xmax, ymax, res) -> array<long>        (cover_bbox)
+    disk_col(cell | (lon, lat), k, res)  -> array<long>          (disk)
+    bbox_col(geom)                       -> struct<xmin, ymin, xmax, ymax>
+
+Arguments are Columns or column names. ``bbox_col`` is the one Python
+step: it parses (multi)polygon/(multi)linestring WKB (``wkb.bbox``) in
+an Arrow-batched UDF and raises on an empty geometry. A NULL coordinate
+gives a NULL cell and a NULL cover/disk, which ``explode`` drops.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from . import wkb
 
 MAX_RES = 26
 _RES_SHIFT = 58
@@ -58,15 +81,16 @@ def _unpart1by1(v: np.ndarray) -> np.ndarray:
 
 
 def _grid_xy(lon, lat, res: int):
-    """lon/lat -> integer grid coords at resolution ``res`` (half-open)."""
+    """lon/lat -> integer grid coords at resolution ``res`` (half-open),
+    clipped to the grid. NaN maps to 0 and ±inf to the edges, as Spark's
+    floor-to-long does in ``grid_xy_col``."""
     n = 1 << res
-    lon = np.asarray(lon, dtype=np.float64)
-    lat = np.asarray(lat, dtype=np.float64)
-    x = np.floor((lon - LON0) / (LON1 - LON0) * n).astype(np.int64)
-    y = np.floor((lat - LAT0) / (LAT1 - LAT0) * n).astype(np.int64)
-    x = np.clip(x, 0, n - 1)
-    y = np.clip(y, 0, n - 1)
-    return x, y
+
+    def axis(v, lo, hi):
+        f = np.floor((np.asarray(v, dtype=np.float64) - lo) / (hi - lo) * n)
+        return np.clip(np.nan_to_num(f, nan=0.0), 0, n - 1).astype(np.int64)
+
+    return axis(lon, LON0, LON1), axis(lat, LAT0, LAT1)
 
 
 def from_xy(x, y, res: int) -> np.ndarray:
@@ -170,11 +194,8 @@ def cover_bbox(xmin: float, ymin: float, xmax: float, ymax: float, res: int) -> 
     equi-join (SURVEY J4). Conservative: returns every cell whose square
     intersects the bbox; the exact PIP filter removes false positives.
     """
-    n = 1 << res
-    x0 = max(0, min(n - 1, int(np.floor((xmin - LON0) / (LON1 - LON0) * n))))
-    x1 = max(0, min(n - 1, int(np.floor((xmax - LON0) / (LON1 - LON0) * n))))
-    y0 = max(0, min(n - 1, int(np.floor((ymin - LAT0) / (LAT1 - LAT0) * n))))
-    y1 = max(0, min(n - 1, int(np.floor((ymax - LAT0) / (LAT1 - LAT0) * n))))
+    x0, y0 = _grid_xy(xmin, ymin, res)
+    x1, y1 = _grid_xy(xmax, ymax, res)
     gx, gy = np.meshgrid(np.arange(x0, x1 + 1), np.arange(y0, y1 + 1))
     return from_xy(gx.ravel(), gy.ravel(), res)
 
@@ -238,3 +259,133 @@ def uncompact(cells, res: int) -> np.ndarray:
         cy = (y[:, None, None] << d) + off[None, None, :]
         out.append(from_xy(cx, cy, res).ravel())
     return np.sort(np.concatenate(out))
+
+
+# ------------------------------------------------------------ Column twins
+
+
+def _col(c) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
+def grid_xy_col(lon, lat, res: int) -> tuple[Column, Column]:
+    """Column twin of ``_grid_xy``: clipped half-open floor grid coords."""
+    n = F.lit(float(1 << res))
+    x = F.floor((_col(lon) - F.lit(LON0)) / F.lit(LON1 - LON0) * n)
+    y = F.floor((_col(lat) - F.lit(LAT0)) / F.lit(LAT1 - LAT0) * n)
+    x = F.least(F.greatest(x, F.lit(0)), F.lit((1 << res) - 1)).cast("long")
+    y = F.least(F.greatest(y, F.lit(0)), F.lit((1 << res) - 1)).cast("long")
+    return x, y
+
+
+def _spread_col(c: Column) -> Column:
+    """Column twin of ``_part1by1``."""
+    v = c.cast("long")
+    v = v.bitwiseOR(F.shiftleft(v, 16)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
+    v = v.bitwiseOR(F.shiftleft(v, 8)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
+    v = v.bitwiseOR(F.shiftleft(v, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
+    v = v.bitwiseOR(F.shiftleft(v, 2)).bitwiseAND(F.lit(0x3333333333333333))
+    v = v.bitwiseOR(F.shiftleft(v, 1)).bitwiseAND(F.lit(0x5555555555555555))
+    return v
+
+
+def _unspread_col(c: Column) -> Column:
+    """Column twin of ``_unpart1by1``."""
+    v = c.bitwiseAND(F.lit(0x5555555555555555))
+    v = v.bitwiseOR(F.shiftrightunsigned(v, 1)).bitwiseAND(F.lit(0x3333333333333333))
+    v = v.bitwiseOR(F.shiftrightunsigned(v, 2)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
+    v = v.bitwiseOR(F.shiftrightunsigned(v, 4)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
+    v = v.bitwiseOR(F.shiftrightunsigned(v, 8)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
+    v = v.bitwiseOR(F.shiftrightunsigned(v, 16)).bitwiseAND(F.lit(0x00000000FFFFFFFF))
+    return v
+
+
+def from_xy_col(x, y, res: int) -> Column:
+    """Column twin of ``from_xy``: Morton-interleave grid x/y into a cell id."""
+    return (
+        _spread_col(_col(x))
+        .bitwiseOR(F.shiftleft(_spread_col(_col(y)), 1))
+        .bitwiseOR(F.lit(res << _RES_SHIFT))
+        .cast("long")
+    )
+
+
+def to_xy_col(cell) -> tuple[Column, Column, Column]:
+    """Column twin of ``to_xy``: cell id -> (x, y, res). Give it a column,
+    not an ``encode_col`` built in the same projection: each de-interleave
+    step reads its input twice, so a nested expression grows 32-fold."""
+    c = _col(cell)
+    m = c.bitwiseAND(F.lit((1 << _RES_SHIFT) - 1))
+    return (
+        _unspread_col(m),
+        _unspread_col(F.shiftrightunsigned(m, 1)),
+        F.shiftrightunsigned(c, _RES_SHIFT),
+    )
+
+
+def encode_col(lon, lat, res: int) -> Column:
+    """Column twin of ``encode``."""
+    if not 0 <= res <= MAX_RES:
+        raise ValueError(f"res must be in [0, {MAX_RES}]")
+    return from_xy_col(*grid_xy_col(lon, lat, res), res)
+
+
+def _block_col(x0: Column, x1: Column, y0: Column, y1: Column, res: int) -> Column:
+    """Cell ids of the grid block [x0, x1] x [y0, y1], rows of y outer and
+    x inner — the ``meshgrid(...).ravel()`` order of the NumPy twins."""
+    return F.flatten(
+        F.transform(
+            F.sequence(y0, y1),
+            lambda y: F.transform(F.sequence(x0, x1), lambda x: from_xy_col(x, y, res)),
+        )
+    )
+
+
+def cover_col(xmin, ymin, xmax, ymax, res: int) -> Column:
+    """Column twin of ``cover_bbox``: array of the cell ids at ``res``
+    intersecting the closed bbox."""
+    x0, y0 = grid_xy_col(xmin, ymin, res)
+    x1, y1 = grid_xy_col(xmax, ymax, res)
+    return _block_col(x0, x1, y0, y1, res)
+
+
+def disk_col(cell_or_lon_lat, k: int, res: int) -> Column:
+    """Column twin of ``disk``: array of the cell ids within Chebyshev
+    distance ``k``, clipped at the world edge. Takes a cell id column at
+    ``res`` (see ``to_xy_col``) or a ``(lon, lat)`` pair, whose cell at
+    ``res`` is the centre."""
+    if isinstance(cell_or_lon_lat, tuple):
+        x, y = grid_xy_col(*cell_or_lon_lat, res)
+    else:
+        x, y, _ = to_xy_col(cell_or_lon_lat)
+    top = F.lit((1 << res) - 1)
+    return _block_col(
+        F.greatest(x - k, F.lit(0)), F.least(x + k, top),
+        F.greatest(y - k, F.lit(0)), F.least(y + k, top),
+        res,
+    )
+
+
+_BBOX = ["xmin", "ymin", "xmax", "ymax"]
+
+
+def _bboxes(geom: pd.Series) -> pd.DataFrame:
+    boxes = np.array([wkb.bbox(bytes(g)) for g in geom], dtype=np.float64)
+    return pd.DataFrame(boxes.reshape(-1, 4), columns=_BBOX)
+
+
+# Marked nondeterministic only so that the optimizer evaluates it once: a
+# filter inferred on a bbox field (overlay's bbox-overlap join infers
+# IS NOT NULL on all four) would otherwise be pushed below the projection
+# and run the UDF a second time.
+_bbox_udf = F.pandas_udf(
+    _bboxes, T.StructType([T.StructField(c, T.DoubleType()) for c in _BBOX])
+).asNondeterministic()
+
+
+def bbox_col(geom) -> Column:
+    """struct<xmin, ymin, xmax, ymax> of a WKB (multi)polygon or
+    (multi)linestring column; an empty geometry fails the task. Make it a
+    column before ``cover_col`` reads its fields: Spark refuses a Python
+    UDF inside the cover's lambda."""
+    return _bbox_udf(_col(geom))

@@ -219,10 +219,28 @@ def promote_to_multi(buf: bytes) -> bytes:
 
 # ---------------------------------------------------------------- analytics
 
-def multipolygon_bbox(buf: bytes) -> tuple[float, float, float, float]:
-    polys = parse_multipolygon(buf)
-    ext = np.concatenate([rings[0] for rings in polys])
-    return float(ext[:, 0].min()), float(ext[:, 1].min()), float(ext[:, 0].max()), float(ext[:, 1].max())
+def bbox(buf: bytes) -> tuple[float, float, float, float]:
+    """(xmin, ymin, xmax, ymax) of a (multi)polygon's exterior rings or a
+    (multi)linestring's vertices. Raises ValueError on an empty geometry
+    and on any other geometry type."""
+    gtype, payload = parse(buf)
+    if gtype == POLYGON:
+        parts = payload[:1]
+    elif gtype == MULTIPOLYGON:
+        parts = [rings[0] for rings in payload]
+    elif gtype == LINESTRING:
+        parts = [payload]
+    elif gtype == MULTILINESTRING:
+        parts = payload
+    else:
+        raise ValueError(f"bbox: expected (multi)polygon or (multi)linestring, got type {gtype}")
+    xy = np.concatenate(parts) if parts else np.empty((0, 2))
+    if not len(xy):
+        raise ValueError("bbox of an empty geometry")
+    return float(xy[:, 0].min()), float(xy[:, 1].min()), float(xy[:, 0].max()), float(xy[:, 1].max())
+
+
+multipolygon_bbox = bbox  # the older name
 
 
 def ring_area(ring: np.ndarray) -> float:

@@ -1514,12 +1514,9 @@ def write_clustered_by_cell(
     makes :func:`scan_bbox` a file-skipping operation. The Iceberg
     analog: write ordered by a space-filling curve so data-file bounds
     align with spatial predicates."""
-    from pyspark.sql import functions as F
+    from .geom import cell
 
-    from .ops.tiles import cell_id_from_tile, tile_xy_cols
-
-    tx, ty = tile_xy_cols(lon_col, lat_col, res)
-    with_cell = df.withColumn("cell_id", cell_id_from_tile(tx, ty, res))
+    with_cell = df.withColumn("cell_id", cell.encode_col(lon_col, lat_col, res))
     n = num_partitions or with_cell.rdd.getNumPartitions()
     clustered = with_cell.repartitionByRange(n, "cell_id")
     return write_checkpointed(
@@ -1784,10 +1781,11 @@ def merge_into(
                 return _file_may_match(meta, range_probe, store, out_dir)
 
         def rewrite(prior, old):
-            cols = _snapshot_spark_schema(
+            schema = _snapshot_spark_schema(
                 spark, store, out_dir, prior,
                 [_part_key(m["path"]) for m in prior["partitions"].values()],
-            ).fieldNames()
+            )
+            cols = schema.fieldNames()
             if sorted(source.columns) != sorted(cols):
                 raise ValueError(
                     f"merge_into: source columns {sorted(source.columns)} != table "
@@ -1796,7 +1794,16 @@ def merge_into(
                 )
             if not n:
                 return None
-            src = source.select(*cols)
+            # part files are written under the rewrite frame's own types:
+            # the source takes the table's types, and only a cast Spark
+            # would widen into them is allowed (update_where's rule)
+            widened = spark.createDataFrame([], schema).unionByName(source.select(*cols))
+            if widened.schema.simpleString() != schema.simpleString():
+                raise ValueError(
+                    f"merge_into: source types change the table schema "
+                    f"{schema.simpleString()} -> {widened.schema.simpleString()}"
+                )
+            src = source.select(*[F.col(f.name).cast(f.dataType) for f in schema.fields])
             if old is None:
                 return src
             survivors = old.join(src.select(key), on=key, how="left_anti").select(*cols)

@@ -43,7 +43,7 @@ def _union_kernel(
         except ValueError as e:
             raise ValueError(f"dissolve group {dict(zip(key_cols, keys))}: {e}") from e
     merged = wkb.dissolve_boundary(bufs) if boundary else wkb.merge_multipolygons(bufs)
-    x0, y0, x1, y1 = wkb.multipolygon_bbox(merged)
+    x0, y0, x1, y1 = wkb.bbox(merged)
     out = {c: [keys[i]] for i, c in enumerate(key_cols)}
     # non-grouped attributes take SQLite's first-row semantics
     # (/root/reference/scripts/ogr_groupby.sh:25-28)

@@ -251,13 +251,13 @@ def mvt_tiles_points(
     Returns (tile_z, tile_x, tile_y, n_features, bytes).
     """
     from ..codec import mvt
+    from ..geom import cell
     from ..geom.cell import LAT0, LON0, LAT1, LON1
-    from . import tiles as tile_ops
 
     sx = (LON1 - LON0) / float(1 << z)
     sy = (LAT1 - LAT0) / float(1 << z)
     cols = [lon, lat, *([id_col] if id_col else []), *attr_cols]
-    tx, ty = tile_ops.tile_xy_cols(lon, lat, z)
+    tx, ty = cell.grid_xy_col(lon, lat, z)
     src = df.select(*cols).withColumn("tile_x", tx).withColumn("tile_y", ty)
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -504,45 +504,13 @@ def mvt_tiles_lines(
     from ..geom import clip as gclip
     from ..geom import simplify as simp
     from ..geom.cell import LAT0, LON0, LAT1, LON1
-    from ..geom import cell as cell_mod
+    from . import tiles as tile_ops
 
     sx = (LON1 - LON0) / float(1 << z)
     sy = (LAT1 - LAT0) / float(1 << z)
     buf_x = buffer_px * sx / extent
     buf_y = buffer_px * sy / extent
-
-    @F.pandas_udf("array<long>")
-    def cover_udf(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            pts = np.vstack(_multilinestring_parts(g))
-            out.append(
-                cell_mod.cover_bbox(
-                    float(pts[:, 0].min()), float(pts[:, 1].min()),
-                    float(pts[:, 0].max()), float(pts[:, 1].max()), z,
-                ).tolist()
-            )
-        return pd.Series(out)
-
-    exploded = lines.select(id_col, geom_col).withColumn(
-        "cell_id", F.explode(cover_udf(F.col(geom_col)))
-    )
-    mask = F.lit((1 << 58) - 1)
-    m = F.col("cell_id").bitwiseAND(mask)
-
-    def unspread(c):
-        v = c
-        v = v.bitwiseAND(F.lit(0x5555555555555555))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 1)).bitwiseAND(F.lit(0x3333333333333333))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 2)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 4)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 8)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 16)).bitwiseAND(F.lit(0x00000000FFFFFFFF))
-        return v
-
-    cover = exploded.withColumn("tile_x", unspread(m)).withColumn(
-        "tile_y", unspread(F.shiftrightunsigned(m, 1))
-    )
+    cover = tile_ops.polygon_tiles(lines.select(id_col, geom_col), z, geom_col=geom_col)
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         txv, tyv = int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0])

@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..geom import cell
 
@@ -190,16 +191,13 @@ def knn_join_broadcast(
     # take() — zero per-row Python objects in either output mode.
     import pyarrow as pa
 
-    from .spatial_join import to_arrow_schema
+    from .spatial_join import arrow_chunks
 
     out_arrow = to_arrow_schema(out_schema)
-    CHUNK_ROWS = 1 << 17
 
     def kernel(batches):
         index: TargetIndex = bc.value
-
-        def flush(buf: list) -> "pa.RecordBatch":
-            tbl = pa.Table.from_batches(buf)
+        for tbl in arrow_chunks(batches, 1 << 17):
             qx = tbl.column(lon).to_numpy(zero_copy_only=False)
             qy = tbl.column(lat).to_numpy(zero_copy_only=False)
             qid_arr = tbl.column(query_id_col).combine_chunks()
@@ -239,18 +237,7 @@ def knn_join_broadcast(
                     pa.array(flat_t),
                     pa.array(flat_d),
                 ]
-            return pa.RecordBatch.from_arrays(cols, schema=out_arrow)
-
-        buf: list = []
-        n = 0
-        for rb in batches:
-            buf.append(rb)
-            n += rb.num_rows
-            if n >= CHUNK_ROWS:
-                yield flush(buf)
-                buf, n = [], 0
-        if buf:
-            yield flush(buf)
+            yield pa.RecordBatch.from_arrays(cols, schema=out_arrow)
 
     return queries.select(query_id_col, lon, lat).mapInArrow(kernel, out_schema)
 
@@ -286,20 +273,10 @@ def shuffle_candidate_pairs(
         F.col(lat).alias("t_lat"),
     )
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def disk_udf(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        cells = cell.encode(lons.to_numpy(), lats.to_numpy(), res)
-        return pd.Series([cell.disk(int(c), max_ring).tolist() for c in cells])
-
-    tgt = tgt.withColumn("cell_id", F.explode(disk_udf("t_lon", "t_lat")))
-
-    @F.pandas_udf(T.LongType())
-    def cell_udf(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        return pd.Series(cell.encode(lons.to_numpy(), lats.to_numpy(), res))
-
+    tgt = tgt.withColumn("cell_id", F.explode(cell.disk_col(("t_lon", "t_lat"), max_ring, res)))
     qry = queries.select(
         F.col(query_id_col).alias("query_id"), F.col(lon).alias("q_lon"), F.col(lat).alias("q_lat")
-    ).withColumn("cell_id", cell_udf("q_lon", "q_lat"))
+    ).withColumn("cell_id", cell.encode_col("q_lon", "q_lat", res))
 
     # guarded modes use a LEFT join so queries whose disk holds ZERO
     # candidates still surface (as a null-target row) — an inner join

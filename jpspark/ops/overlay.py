@@ -28,8 +28,9 @@ areas stay exact.
 
 Distributed shape (the 100-TB plan):
 
-  1. COVER: one ``mapInPandas`` pass per side emits (id, covering cell at
-     ``res``, bbox) — ids + int64 cells only, geometry stays put.
+  1. COVER: per side, one Arrow-batched bbox UDF and the Column cell
+     cover of geom/cell.py emit (id, covering cell at ``res``, bbox) —
+     ids + int64 cells only, geometry stays put.
   2. CANDIDATES: cell equi-join → distinct (a_id, b_id) pairs, then a
      JVM-side bbox-overlap filter. Ids-only exchange; AQE splits hot
      cells (Tokyo/Osaka) exactly as in the PIP join.
@@ -166,40 +167,14 @@ def _cover_cells(df: DataFrame, id_col: str, geom_col: str, res: int) -> DataFra
     """(id, cell, xmin, ymin, xmax, ymax): one row per covering cell of
     each geometry's bbox at ``res``. Geometry does NOT leave this stage —
     the exchange carries ids, int64 cells, and four doubles."""
-    schema = (
-        f"{id_col} long, cell long, xmin double, ymin double, "
-        "xmax double, ymax double"
+    bb = F.col("__bb")
+    return df.select(
+        F.col(id_col).cast("long").alias(id_col), cell_mod.bbox_col(geom_col).alias("__bb")
+    ).select(
+        id_col,
+        F.explode(cell_mod.cover_col(bb.xmin, bb.ymin, bb.xmax, bb.ymax, res)).alias("cell"),
+        "__bb.*",
     )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, cells, bbs = [], [], []
-            for i, g in zip(pdf[id_col].to_numpy(), pdf[geom_col]):
-                x0, y0, x1, y1 = wkb.multipolygon_bbox(bytes(g))
-                cov = cell_mod.cover_bbox(x0, y0, x1, y1, res)
-                ids.append(np.full(len(cov), i, dtype=np.int64))
-                cells.append(np.asarray(cov, dtype=np.int64))
-                bbs.append(
-                    np.repeat([[x0, y0, x1, y1]], len(cov), axis=0)
-                )
-            if not ids:
-                yield pd.DataFrame(
-                    columns=[id_col, "cell", "xmin", "ymin", "xmax", "ymax"]
-                )
-                continue
-            bb = np.concatenate(bbs)
-            yield pd.DataFrame(
-                {
-                    id_col: np.concatenate(ids),
-                    "cell": np.concatenate(cells),
-                    "xmin": bb[:, 0],
-                    "ymin": bb[:, 1],
-                    "xmax": bb[:, 2],
-                    "ymax": bb[:, 3],
-                }
-            )
-
-    return df.select(id_col, geom_col).mapInPandas(gen, schema)
 
 
 def overlay_intersection(

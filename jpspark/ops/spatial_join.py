@@ -15,7 +15,7 @@ Two physical strategies (SURVEY §4):
 * ``pip_join_broadcast`` — the polygon side (admin boundaries: ~1e5 rows,
   ~100 MB WKB nationwide) is packed into a per-cell candidate index + an
   STR R-tree, broadcast to executors, and the join becomes a single
-  ``mapInPandas`` pass over the point table: **zero shuffle of the 10^12-row
+  ``mapInArrow`` pass over the point table: **zero shuffle of the 10^12-row
   image side**. This is the plan you want at 100 TB — the big side streams
   through map tasks, the small side rides the broadcast.
 
@@ -38,20 +38,40 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..geom import cell, pip, rtree, wkb
 
-try:  # public since Spark 3.x: StructType -> pyarrow schema
-    from pyspark.sql.pandas.types import to_arrow_schema
-except ImportError:  # pragma: no cover - fallback for API moves
-    def to_arrow_schema(schema):
-        import pyarrow as pa
-
-        return pa.Schema.from_pandas(
-            __import__("pandas").DataFrame(columns=[f.name for f in schema.fields])
-        )
-
 DEFAULT_RES = 7
+
+
+def arrow_chunks(batches, rows: int):
+    """Coalesce a ``mapInArrow`` RecordBatch stream into pyarrow Tables of
+    at least ``rows`` rows (the last one may be shorter): Arrow batches
+    are sized for fat rows, and a kernel's per-call dispatch is
+    amortized over large chunks."""
+    import pyarrow as pa
+
+    buf: list = []
+    n = 0
+    for rb in batches:
+        buf.append(rb)
+        n += rb.num_rows
+        if n >= rows:
+            yield pa.Table.from_batches(buf)
+            buf, n = [], 0
+    if buf:
+        yield pa.Table.from_batches(buf)
+
+
+def _id_type(polys_pdf: pd.DataFrame, poly_id_col: str, out_type: T.DataType | None) -> T.DataType:
+    """Spark type of the polygon id column: ``out_type`` if given, else
+    inferred from the pandas dtype (a string default would make the Arrow
+    id array silently mis-typed for integer-keyed layers)."""
+    if out_type is not None:
+        return out_type
+    kind = polys_pdf[poly_id_col].dtype.kind
+    return T.LongType() if kind in "iu" else T.DoubleType() if kind == "f" else T.StringType()
 
 
 def _ring_parity_grid(pys: np.ndarray, pxs: np.ndarray, pre) -> np.ndarray:
@@ -319,15 +339,7 @@ def pip_join_broadcast(
         polys_pdf, poly_id_col, res=res, settled_cells=settled_cells
     )
     bc = spark.sparkContext.broadcast(index)
-    if out_type is None:
-        # infer from the polygon id dtype (a string default would make the
-        # Arrow id array silently mis-typed for integer-keyed layers)
-        kind = polys_pdf[poly_id_col].dtype.kind
-        out_type = (
-            T.LongType() if kind in "iu"
-            else T.DoubleType() if kind == "f"
-            else T.StringType()
-        )
+    out_type = _id_type(polys_pdf, poly_id_col, out_type)
     out_schema = T.StructType(points.schema.fields + [T.StructField(out_col, out_type)])
 
     # Hot path uses mapInArrow (not mapInPandas): Arrow batches are sized
@@ -338,7 +350,6 @@ def pip_join_broadcast(
     # with zero pandas involvement.
     import pyarrow as pa
 
-    CHUNK_ROWS = 1 << 18
     out_arrow = to_arrow_schema(out_schema)
 
     def kernel(batches):
@@ -346,27 +357,14 @@ def pip_join_broadcast(
         # id lookup as an Arrow array: ordinal -> id via C-speed take()
         # (never materializes per-row Python objects)
         ids_arrow = pa.array(list(idx.ids), type=out_arrow.field(out_col).type)
-
-        def flush(buf: list) -> "pa.RecordBatch":
-            tbl = pa.Table.from_batches(buf)
+        for tbl in arrow_chunks(batches, 1 << 18):
             px = tbl.column(lon).to_numpy(zero_copy_only=False)
             py = tbl.column(lat).to_numpy(zero_copy_only=False)
             ords = idx.assign_ordinals(px, py)
             take_idx = pa.array(ords, mask=(ords < 0))  # -1 -> null
             cols = [tbl.column(i).combine_chunks() for i in range(tbl.num_columns)]
             cols.append(ids_arrow.take(take_idx))
-            return pa.RecordBatch.from_arrays(cols, schema=out_arrow)
-
-        buf: list = []
-        n = 0
-        for rb in batches:
-            buf.append(rb)
-            n += rb.num_rows
-            if n >= CHUNK_ROWS:
-                yield flush(buf)
-                buf, n = [], 0
-        if buf:
-            yield flush(buf)
+            yield pa.RecordBatch.from_arrays(cols, schema=out_arrow)
 
     result = points.mapInArrow(kernel, out_schema)
     if not keep_unmatched:
@@ -402,48 +400,30 @@ def pip_count_broadcast(
         polys_pdf, poly_id_col, res=res, settled_cells=settled_cells
     )
     bc = spark.sparkContext.broadcast(index)
-    if out_type is None:
-        kind = polys_pdf[poly_id_col].dtype.kind
-        out_type = (
-            T.LongType() if kind in "iu"
-            else T.DoubleType() if kind == "f"
-            else T.StringType()
-        )
     out_schema = T.StructType(
-        [T.StructField(out_col, out_type), T.StructField("n_points", T.LongType())]
+        [
+            T.StructField(out_col, _id_type(polys_pdf, poly_id_col, out_type)),
+            T.StructField("n_points", T.LongType()),
+        ]
     )
     import pyarrow as pa
 
-    CHUNK_ROWS = 1 << 19
     out_arrow = to_arrow_schema(out_schema)
 
     def kernel(batches):
         idx: PolygonIndex = bc.value
         ids_arrow = pa.array(list(idx.ids), type=out_arrow.field(out_col).type)
         n_ids = len(idx.ids)
-
-        def flush(buf: list) -> "pa.RecordBatch":
-            tbl = pa.Table.from_batches(buf)
+        for tbl in arrow_chunks(batches, 1 << 19):
             px = tbl.column(lon).to_numpy(zero_copy_only=False)
             py = tbl.column(lat).to_numpy(zero_copy_only=False)
             ords = idx.assign_ordinals(px, py)
             counts = np.bincount(ords + 1, minlength=n_ids + 1)[1:]  # drop -1
             nz = np.flatnonzero(counts)
-            return pa.RecordBatch.from_arrays(
+            yield pa.RecordBatch.from_arrays(
                 [ids_arrow.take(pa.array(nz)), pa.array(counts[nz].astype(np.int64))],
                 schema=out_arrow,
             )
-
-        buf: list = []
-        n = 0
-        for rb in batches:
-            buf.append(rb)
-            n += rb.num_rows
-            if n >= CHUNK_ROWS:
-                yield flush(buf)
-                buf, n = [], 0
-        if buf:
-            yield flush(buf)
 
     partials = points.select(lon, lat).mapInArrow(kernel, out_schema)
     return partials.groupBy(out_col).agg(F.sum("n_points").alias("n_points"))
@@ -451,24 +431,19 @@ def pip_count_broadcast(
 
 def explode_polygons_to_cells(polys: DataFrame, geom_col: str = "geom", res: int = DEFAULT_RES) -> DataFrame:
     """Polygon side of the shuffle strategy: one row per covering cell.
-    Cover is bbox-conservative; exact PIP later removes false positives."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover_udf(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            x0, y0, x1, y1 = wkb.multipolygon_bbox(bytes(g))
-            out.append(cell.cover_bbox(x0, y0, x1, y1, res).tolist())
-        return pd.Series(out)
-
-    return polys.withColumn("cell_id", F.explode(cover_udf(F.col(geom_col))))
+    Cover is bbox-conservative; exact PIP later removes false positives.
+    (Multi)linestrings are covered the same way."""
+    bb = F.col("__bb")
+    return (
+        polys.withColumn("__bb", cell.bbox_col(geom_col))
+        .withColumn("cell_id", F.explode(cell.cover_col(bb.xmin, bb.ymin, bb.xmax, bb.ymax, res)))
+        .drop("__bb")
+    )
 
 
 def attach_cell(points: DataFrame, lon: str = "lon", lat: str = "lat", res: int = DEFAULT_RES) -> DataFrame:
-    @F.pandas_udf(T.LongType())
-    def cell_udf(lons: pd.Series, lats: pd.Series) -> pd.Series:
-        return pd.Series(cell.encode(lons.to_numpy(), lats.to_numpy(), res))
-
-    return points.withColumn("cell_id", cell_udf(F.col(lon), F.col(lat)))
+    """Point side: the cell id at ``res`` (NULL for a NULL coordinate)."""
+    return points.withColumn("cell_id", cell.encode_col(lon, lat, res))
 
 
 def pip_join_shuffle(

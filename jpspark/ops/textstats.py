@@ -266,7 +266,6 @@ def inverted_index(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_postings: int = 10000,
-    persist_pairs: bool = False,
 ) -> DataFrame:
     """Inverted index build: token -> document frequency + the sorted
     posting list (the retrieval-side table a curation/search pipeline
@@ -296,16 +295,9 @@ def inverted_index(
         .filter(F.col("token") != "")
         .distinct()
     )
-    if persist_pairs:
-        # three plan subtrees consume pairs (df count, semi filter,
-        # posting build); caching trades memory for one compute. The
-        # frame is CORPUS-SCALE (one row per distinct (token, doc) pair,
-        # token strings included) and the cache outlives the returned
-        # lazy frame, so this is opt-in: right for bounded corpora and
-        # interactive sessions, wrong as a default at 10^12 docs — there,
-        # either accept the re-scan (two-pass is the memory-bounding
-        # trade) or materialize pairs to a table explicitly.
-        pairs = pairs.persist()
+    # three plan subtrees consume pairs (df count, semi filter, posting
+    # build) and re-scan the corpus; the frame is corpus-scale (one row
+    # per distinct (token, doc) pair), so it is never cached here
     dfreq = pairs.groupBy("token").agg(F.count("*").alias("df"))
     small = pairs.join(
         dfreq.filter(F.col("df") <= max_postings).select("token"),
@@ -315,9 +307,4 @@ def inverted_index(
     postings = small.groupBy("token").agg(
         F.array_join(F.array_sort(F.collect_list("_doc")), ",").alias("postings")
     )
-    out = dfreq.join(postings, "token", "left").select("token", "df", "postings")
-    # expose the persisted handle so a caller that materializes the result
-    # can release the corpus-scale pairs cache (round-7 advice fix); None
-    # when persist_pairs was off
-    out._jpspark_pairs = pairs if persist_pairs else None
-    return out
+    return dfreq.join(postings, "token", "left").select("token", "df", "postings")

@@ -27,48 +27,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from ..geom import cell as cell_mod
-from ..geom import wkb
-from ..geom.cell import LAT0, LAT1, LON0, LON1, _RES_SHIFT
-
-
-def tile_xy_cols(lon_col: str, lat_col: str, z: int):
-    """Pure Column expressions (codegen'd, UDF-free) for tile x/y at zoom z."""
-    n = F.lit(float(1 << z))
-    tx = F.floor((F.col(lon_col) - F.lit(LON0)) / F.lit(LON1 - LON0) * n)
-    ty = F.floor((F.col(lat_col) - F.lit(LAT0)) / F.lit(LAT1 - LAT0) * n)
-    tx = F.least(F.greatest(tx, F.lit(0)), F.lit((1 << z) - 1)).cast("long")
-    ty = F.least(F.greatest(ty, F.lit(0)), F.lit((1 << z) - 1)).cast("long")
-    return tx, ty
-
-
-def cell_id_from_tile(tx_col, ty_col, z: int):
-    """Column expr: Morton-interleave tile x/y into the cell id — the SQL
-    translation of geom.cell.from_xy, staying fully JVM-side."""
-    def spread(c):
-        v = c.cast("long")
-        v = v.bitwiseOR(F.shiftleft(v, 16)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        v = v.bitwiseOR(F.shiftleft(v, 8)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        v = v.bitwiseOR(F.shiftleft(v, 4)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        v = v.bitwiseOR(F.shiftleft(v, 2)).bitwiseAND(F.lit(0x3333333333333333))
-        v = v.bitwiseOR(F.shiftleft(v, 1)).bitwiseAND(F.lit(0x5555555555555555))
-        return v
-
-    return (
-        spread(tx_col)
-        .bitwiseOR(F.shiftleft(spread(ty_col), 1))
-        .bitwiseOR(F.lit(z << _RES_SHIFT))
-        .cast("long")
-    )
+from ..geom import cell
+from .spatial_join import explode_polygons_to_cells
 
 
 def tile_assign(images: DataFrame, z: int, lon: str = "lon", lat: str = "lat") -> DataFrame:
     """Assign each image row to its raster tile and matching vector cell."""
-    tx, ty = tile_xy_cols(lon, lat, z)
+    tx, ty = cell.grid_xy_col(lon, lat, z)
     df = images.withColumn("tile_x", tx).withColumn("tile_y", ty).withColumn("tile_z", F.lit(z))
-    return df.withColumn("cell_id", cell_id_from_tile(F.col("tile_x"), F.col("tile_y"), z))
+    return df.withColumn("cell_id", cell.from_xy_col("tile_x", "tile_y", z))
 
 
 def tile_rollup(assigned: DataFrame, parent_z: int, z: int) -> DataFrame:
@@ -94,34 +62,10 @@ def polygon_tiles(polys: DataFrame, z: int, geom_col: str = "geom") -> DataFrame
     tile) whose tile square intersects the polygon bbox at zoom z —
     the explode that lets raster tiles equi-join vector layers on
     (tile_z, tile_x, tile_y). Conservative bbox cover (exact refinement
-    is the PIP join's job)."""
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def cover_udf(geom: pd.Series) -> pd.Series:
-        out = []
-        for g in geom:
-            x0, y0, x1, y1 = wkb.multipolygon_bbox(bytes(g))
-            out.append(cell_mod.cover_bbox(x0, y0, x1, y1, z).tolist())
-        return pd.Series(out)
-
-    exploded = polys.withColumn("cell_id", F.explode(cover_udf(F.col(geom_col))))
-    # recover tile x/y from the Morton cell id (JVM-side bit math)
-    def unspread(c):
-        v = c
-        v = v.bitwiseAND(F.lit(0x5555555555555555))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 1)).bitwiseAND(F.lit(0x3333333333333333))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 2)).bitwiseAND(F.lit(0x0F0F0F0F0F0F0F0F))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 4)).bitwiseAND(F.lit(0x00FF00FF00FF00FF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 8)).bitwiseAND(F.lit(0x0000FFFF0000FFFF))
-        v = v.bitwiseOR(F.shiftrightunsigned(v, 16)).bitwiseAND(F.lit(0x00000000FFFFFFFF))
-        return v
-
-    mask = F.lit((1 << 58) - 1)
-    m = F.col("cell_id").bitwiseAND(mask)
-    return (
-        exploded.withColumn("tile_z", F.lit(z))
-        .withColumn("tile_x", unspread(m))
-        .withColumn("tile_y", unspread(F.shiftrightunsigned(m, 1)))
-    )
+    is the PIP join's job); (multi)linestrings are covered the same way."""
+    exploded = explode_polygons_to_cells(polys, geom_col, z)
+    tx, ty, _ = cell.to_xy_col("cell_id")
+    return exploded.withColumn("tile_z", F.lit(z)).withColumn("tile_x", tx).withColumn("tile_y", ty)
 
 
 def tile_pyramid(

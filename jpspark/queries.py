@@ -2624,6 +2624,7 @@ def q_shapefile_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ops import ingest, mapping
     from .ops import spatial_join as sj
     from .codec import shp as shp_codec
+    from .geom import cell
     from .geom import wkb as wkb_mod
 
     nation = pd.read_parquet(f"{sf_dir.rstrip('/')}/nation.parquet")
@@ -2671,20 +2672,12 @@ def q_shapefile_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     def area_udf(geoms: pd.Series) -> pd.Series:
         return pd.Series([wkb_mod.multipolygon_area(bytes(g)) for g in geoms])
 
-    @F.pandas_udf("array<double>")
-    def bbox_udf(geoms: pd.Series) -> pd.Series:
-        return pd.Series([list(wkb_mod.multipolygon_bbox(bytes(g))) for g in geoms])
-
     enriched = scanned.select(
         F.col("N_NAME").alias("n_name"),
         F.col("N_KEY").alias("n_key"),
         area_udf("geom").alias("area"),
-        bbox_udf("geom").alias("bb"),
-    ).select(
-        "n_name", "n_key", "area",
-        F.col("bb")[0].alias("xmin"), F.col("bb")[1].alias("ymin"),
-        F.col("bb")[2].alias("xmax"), F.col("bb")[3].alias("ymax"),
-    )
+        cell.bbox_col("geom").alias("bb"),
+    ).select("n_name", "n_key", "area", "bb.*")
     # PIP consumption over the scanned layer itself: every square's centroid
     # must land back in its own polygon (broadcast ray-cast index built
     # FROM the codec-parsed geometries — bounded: 25 features)
@@ -5657,21 +5650,8 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ops import textstats as ts
 
     docs = _t(spark, sf_dir, "documents")
-    # persist_pairs: the shared (token, doc) frame has three plan
-    # consumers; at gate scale (500 docs) the cache is tiny and the
-    # opt-in matches the repo's minhash-signatures precedent
-    idx = ts.inverted_index(docs, max_postings=50, persist_pairs=True)
-    out = (
-        idx.filter(F.col("df") >= 2)
-        .orderBy("token")
-        # materialize, then release the pairs cache instead of leaking it
-        # for the rest of the session (round-7 advice fix)
-        .localCheckpoint(eager=True)
-    )
-    pairs = getattr(idx, "_jpspark_pairs", None)
-    if pairs is not None:
-        pairs.unpersist()
-    return out.orderBy("token")
+    idx = ts.inverted_index(docs, max_postings=50)
+    return idx.filter(F.col("df") >= 2).orderBy("token")
 
 
 def o_inverted_index() -> str:

@@ -149,3 +149,15 @@ def test_candidate_pruning_is_invisible(spark):
         }
 
     assert snap(4) == snap(7)
+
+
+def test_cover_parses_each_geometry_once(spark):
+    """The bbox-overlap join infers IS NOT NULL filters on the bbox
+    fields; they must not be pushed below the bbox UDF, which would parse
+    every geometry twice. One Python evaluation node per side."""
+    admin = fx.admin_polygons(4)
+    df_a = spark.createDataFrame(admin[["ogc_fid", "geom"]].rename(columns={"ogc_fid": "a_id"}))
+    df_b = spark.createDataFrame(admin[["ogc_fid", "geom"]].rename(columns={"ogc_fid": "b_id"}))
+    inter = overlay.overlay_intersection(df_a, df_b, "a_id", "b_id", res=6)
+    plan = inter._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 2

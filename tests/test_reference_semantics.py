@@ -3,12 +3,15 @@
 
 from __future__ import annotations
 
+import glob
 import io
+import os
 import re
 import zipfile
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -1027,7 +1030,16 @@ def test_merge_into_partial_copy_on_write(spark, tmp_path):
         spark, out, spark.range(5000, 5010).withColumn("v", F.lit(1)), key="id"
     )
     assert m3["merge_report"]["files_rewritten"] == 0
-    assert mf.read_snapshot(spark, out).count() == 1060
+    back = mf.read_snapshot(spark, out)
+    assert back.count() == 1060
+    # the int source is written under the table's bigint schema: every
+    # part file stores v as INT64 (an INT32 part fails any scan whose
+    # schema is taken from it), and the values read back:
+    # 2*(0+..+949) - 7*100 + 1*10
+    parts = glob.glob(os.path.join(out, "**", "*.parquet"), recursive=True)
+    assert {str(pq.read_schema(p).field("v").type) for p in parts} == {"int64"}
+    assert dict(back.dtypes)["v"] == "bigint"
+    assert back.agg(F.sum("v")).first()[0] == 901_550 - 700 + 10
 
     # empty source: committed no-op snapshot
     m4 = mf.merge_into(spark, out, spark.range(0).withColumn("v", F.lit(0)), key="id")
@@ -1046,6 +1058,9 @@ def test_merge_into_rejects_bad_sources(spark, tmp_path):
         mf.merge_into(spark, out, nul, key="id")
     with pytest.raises(ValueError, match="source columns"):
         mf.merge_into(spark, out, spark.range(3), key="id")
+    with pytest.raises(ValueError, match="change the table schema"):
+        wide = spark.createDataFrame([(20, 1.5)], "id long, v double")
+        mf.merge_into(spark, out, wide, key="id")
 
 
 def test_merge_into_range_probe_big_source(spark, tmp_path):

@@ -10,6 +10,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from jpspark import fixtures as fx
 from jpspark.geom import cell, wkb
@@ -443,3 +445,111 @@ def test_dissolve_boundary_matches_plain_point_set_on_fixtures(spark, polys):
     assert (bnd["n_parts"] <= plain["n_parts"]).all()
     for c in ("area", "xmin", "ymin", "xmax", "ymax"):
         np.testing.assert_allclose(bnd[c].to_numpy(), plain[c].to_numpy(), rtol=1e-9)
+
+
+# ------------------------------------------- Column cell index == NumPy twins
+
+_RES = st.sampled_from([0, 1, 3, 7, 12, 20, cell.MAX_RES])
+
+
+@st.composite
+def _cell_case(draw):
+    """A resolution, a disk radius, and rows of (lon, lat, bbox). Points
+    mix arbitrary coordinates (out-of-world ones included, which clip),
+    exact cell borders, the world edges, NaN and ±inf; each bbox spans at
+    most a few cells at ``res`` from an anchor that may lie past the world
+    edge."""
+    res = draw(_RES)
+    cw, ch = cell.cell_size_deg(res)
+    n = 1 << res
+    lon = st.one_of(
+        st.floats(-400.0, 400.0),
+        st.integers(-2, n + 2).map(lambda i: cell.LON0 + i * cw),
+        st.sampled_from([cell.LON0, cell.LON1]),
+    )
+    lat = st.one_of(
+        st.floats(-200.0, 200.0),
+        st.integers(-2, n + 2).map(lambda i: cell.LAT0 + i * ch),
+        st.sampled_from([cell.LAT0, cell.LAT1]),
+    )
+    # points may also be non-finite or beyond int64 grid range
+    odd = st.sampled_from([float("nan"), float("inf"), -float("inf"), 1e300, -1e300])
+    span = st.integers(0, 3)
+    rows = draw(
+        st.lists(
+            st.tuples(st.one_of(lon, odd), st.one_of(lat, odd), lon, lat, span, span),
+            min_size=1, max_size=25,
+        )
+    )
+    rows = [(x, y, bx, by, bx + w * cw, by + h * ch) for x, y, bx, by, w, h in rows]
+    return res, draw(st.integers(0, 3)), rows
+
+
+@settings(max_examples=12, deadline=None)
+@given(_cell_case())
+@example((0, 1, [(180.0, 90.0, -180.0, -90.0, 180.0, 90.0)]))
+@example((cell.MAX_RES, 2, [(-180.0, -90.0, 179.99999, 89.99999, 180.0, 90.0)]))
+def test_cell_columns_match_numpy(spark, case):
+    """Every Column function of geom/cell.py equals its NumPy twin,
+    cover and disk element order included. Each function reads input
+    columns (the NumPy grid coords and cell id ride along as data), so no
+    de-interleave is built over a fresh interleave expression."""
+    res, k, rows = case
+    data = []
+    for lon, lat, x0, y0, x1, y1 in rows:
+        gx, gy = (int(v) for v in cell._grid_xy(lon, lat, res))
+        data.append((lon, lat, x0, y0, x1, y1, gx, gy, int(cell.encode(lon, lat, res))))
+    df = spark.createDataFrame(
+        data,
+        "lon double, lat double, x0 double, y0 double, x1 double, y1 double, "
+        "gx long, gy long, cell long",
+    )
+    cgx, cgy = cell.grid_xy_col("lon", "lat", res)
+    tx, ty, tr = cell.to_xy_col("cell")
+    got = df.select(
+        cgx.alias("gx"), cgy.alias("gy"),
+        cell.from_xy_col("gx", "gy", res).alias("xy"),
+        cell.encode_col("lon", "lat", res).alias("cell"),
+        tx.alias("tx"), ty.alias("ty"), tr.alias("tr"),
+        cell.cover_col("x0", "y0", "x1", "y1", res).alias("cover"),
+        cell.disk_col("cell", k, res).alias("disk_cell"),
+        cell.disk_col(("lon", "lat"), k, res).alias("disk_pt"),
+    ).collect()
+    for (lon, lat, x0, y0, x1, y1, gx, gy, want), r in zip(data, got):
+        assert (r.gx, r.gy) == (gx, gy)
+        assert r.xy == r.cell == int(cell.from_xy(gx, gy, res)) == want
+        assert (r.tx, r.ty, r.tr) == tuple(int(v) for v in cell.to_xy(want))
+        assert r.cover == cell.cover_bbox(x0, y0, x1, y1, res).tolist()
+        assert r.disk_cell == r.disk_pt == cell.disk(want, k).tolist()
+
+
+def test_null_coordinates_in_shuffle_joins(spark):
+    """A NULL lon or lat has no cell: pip_join_shuffle drops the point;
+    knn_join_shuffle flags the query as one inexact NULL-neighbour row,
+    and guard="error" fails the job naming it."""
+    def square(x0, y0):
+        return wkb.encode_multipolygon(
+            [[np.array([[x0, y0], [x0 + 1, y0], [x0 + 1, y0 + 1], [x0, y0 + 1], [x0, y0]], float)]]
+        )
+
+    polys = spark.createDataFrame([(1, square(139.0, 35.0))], "pid long, geom binary")
+    pts = spark.createDataFrame(
+        [(1, 139.5, 35.5), (2, None, 35.5), (3, 139.5, None), (4, None, None)],
+        "image_id long, lon double, lat double",
+    )
+    pip_rows = sj.pip_join_shuffle(pts, polys, "pid").collect()
+    assert [(r.image_id, r.poly_id) for r in pip_rows] == [(1, 1)]
+
+    tgt = spark.createDataFrame(
+        [(10 + i, 139.0 + 0.1 * i, 35.0 + 0.1 * i) for i in range(10)],
+        "ogc_fid long, lon double, lat double",
+    )
+    out = knn_ops.knn_join_shuffle(pts, tgt, 2, guard="flag").toPandas().sort_values(["query_id", "rank"])
+    assert out[out["query_id"] == 1]["target_id"].tolist() == [15, 14]
+    assert out[out["query_id"] == 1]["exact"].all()
+    nulls = out[out["query_id"] != 1]
+    assert sorted(nulls["query_id"]) == [2, 3, 4]
+    assert nulls[["rank", "target_id", "dist"]].isna().all().all()
+    assert not nulls["exact"].any()
+    with pytest.raises(Exception, match=r"knn_join_shuffle inexact .*query_id=2"):
+        knn_ops.knn_join_shuffle(pts.filter("image_id = 2"), tgt, 2, guard="error").collect()
